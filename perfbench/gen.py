@@ -61,7 +61,7 @@ CORPUS_WORDS = (30, 70)
 CORPUS_PLANTED = 0.30
 CORPUS_EDITS = (1, 8)
 CORPUS_VOCAB = 5_000
-CORPUS_SHARDS = 48
+CORPUS_SHARDS = 24
 
 # ------------------------------------------------------------- calendar
 

@@ -38,9 +38,8 @@ from spans import (  # noqa: E402
 #: Spark runs as local[CORES] with CORES shuffle partitions
 CORES = min(4, len(os.sched_getaffinity(0)))
 #: set-up is repeated this many times per run; setup_s is the median
-SETUP_REPS = 3
-#: untimed requests between the set-ups and the measured ones
-WARMUP_REQUESTS = 2
+#: CPU time of the repetitions after the first, which launches the JVM
+SETUP_REPS = 4
 #: no request may take longer than this; a run that would is cut short
 REQUEST_LIMIT_S = 60.0
 
@@ -61,7 +60,11 @@ def start_spark(work: Path):
         .config("spark.sql.shuffle.partitions", str(CORES))
         .config("spark.default.parallelism", str(CORES))
         .config("spark.driver.memory", "2g")
-        .config("spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={work / 'tmp'}")
+        # a fixed set of JIT compiler threads, so FamilyCPU can leave them
+        # out, and the whole heap committed at start, so that peak RSS does
+        # not follow the collector's heap resizing from run to run
+        .config("spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={work / 'tmp'} "
+                "-XX:-UseDynamicNumberOfCompilerThreads -Xms2g")
         .config("spark.local.dir", str(work / "spark-local"))
         .config("spark.sql.warehouse.dir", str(work / "warehouse"))
         .config("spark.sql.session.timeZone", "UTC")
@@ -128,6 +131,50 @@ def _family() -> set[int]:
     return family
 
 
+def _proc_stat(path: str) -> tuple[str, int]:
+    """(thread or process name, user + system CPU ticks) from a /proc
+    stat file; a process's figure includes its ended threads."""
+    with open(path) as fh:
+        comm, rest = fh.read().split(" (", 1)[1].rsplit(")", 1)
+    fields = rest.split()
+    return comm, int(fields[11]) + int(fields[12])
+
+
+class FamilyCPU:
+    """CPU seconds (user + system, all threads) used so far by this
+    process and the JVM it launched, less the JVM's JIT compiler
+    threads, from /proc.  On a shared host a request's CPU time is far
+    steadier than its wall time, which also counts the time its threads
+    waited for a core another tenant held.  The compiler threads are
+    left out because they compile on their own schedule: a JVM that
+    has served a few requests still spends 1-5 s of compiler time per
+    request, decaying over minutes, and that decay would dominate the
+    figure.  The JVM runs with a fixed set of compiler threads (see
+    ``start_spark``), found once here."""
+
+    def __init__(self) -> None:
+        self.tick = os.sysconf("SC_CLK_TCK")
+        self.jvms = sorted(_family() - {os.getpid()})
+        self.jit: dict[str, int] = {}
+        for pid in self.jvms:
+            for tid in os.listdir(f"/proc/{pid}/task"):
+                path = f"/proc/{pid}/task/{tid}/stat"
+                with contextlib.suppress(OSError, ValueError):
+                    if "CompilerThre" in _proc_stat(path)[0]:
+                        self.jit[path] = 0
+
+    def __call__(self) -> float:
+        ticks = 0
+        for pid in self.jvms:
+            with contextlib.suppress(OSError, ValueError):
+                ticks += _proc_stat(f"/proc/{pid}/stat")[1]
+        for path in self.jit:
+            # a thread that has ended keeps its last reading
+            with contextlib.suppress(OSError, ValueError):
+                self.jit[path] = _proc_stat(path)[1]
+        return time.process_time() + (ticks - sum(self.jit.values())) / self.tick
+
+
 def peak_rss_mb() -> float:
     """Peak resident memory (VmHWM) of this process plus its descendants
     (the JVM), from /proc."""
@@ -167,6 +214,8 @@ class FameWorkload:
     execute -> codegen -> materialise."""
 
     entity_cols: tuple[str, ...] = ()
+    #: untimed requests between the set-ups and the measured ones
+    warmup_requests = 3
 
     def request(self, spark, j: int, tr: Tracer):
         from fame2pygen_spark import FameEngine, generate_test_script, parse_script
@@ -303,13 +352,14 @@ class PanelScript(FameWorkload):
 class DedupCorpus:
     name = "dedup_corpus"
     unit = "docs"
+    # fewer than the FAME workloads: a request takes twice as long
+    warmup_requests = 2
 
     def prepare(self, seed: int, work: Path) -> None:
         import pyarrow as pa
 
-        # measured shards first, then one warm-up shard per set-up
-        # request shards, then the shards of the untimed warm-up requests
-        self.shards = gen.corpus_shards(seed, gen.CORPUS_SHARDS + WARMUP_REQUESTS)
+        # the measured requests' shards first, then the warm-up requests'
+        self.shards = gen.corpus_shards(seed, gen.CORPUS_SHARDS + self.warmup_requests)
         self.recall = oracle.RecallTally()
         self.paths = []
         for i, sh in enumerate(self.shards):
@@ -396,15 +446,16 @@ def setup(workload, seed: int, work: Path, rep: int):
     return spark, time.perf_counter() - t0
 
 
-def measure(workload, spark, seconds: float, tr: Tracer):
+def measure(workload, spark, seconds: float, tr: Tracer, cpu: FamilyCPU):
     """Closed loop, one client: request j+1 starts after request j and
     its oracle check finish.  Runs until the requests' own wall time
     reaches ``seconds``; the oracle check is not timed.
 
-    Returns (wall times, traced flags, items per request, failures)."""
+    Returns (wall times, CPU times, traced flags, items per request,
+    failures)."""
     sc = spark.sparkContext
     limit = workload.limit() if hasattr(workload, "limit") else 1 << 30
-    samples, traced, items = [], [], []
+    samples, cpus, traced, items = [], [], [], []
     failures: dict[int, list[str]] = {}
     j = 0
     while sum(samples) < seconds and j < limit:
@@ -412,15 +463,15 @@ def measure(workload, spark, seconds: float, tr: Tracer):
         tr.request = j
         if use_trace:
             sc.setJobGroup(f"req-{j}", f"request {j}")
-        t0 = time.perf_counter()
+        c0, t0 = cpu(), time.perf_counter()
         try:
             with tr.span("request") if use_trace else contextlib.nullcontext():
                 key, res, out = workload.request(spark, j, tr if use_trace else Tracer())
-            dt = time.perf_counter() - t0
+            dt, dc = time.perf_counter() - t0, cpu() - c0
             problems = workload.check(key, res, out)
             items.append(workload.items(key))
         except Exception as exc:  # a failed request is counted, not fatal
-            dt = time.perf_counter() - t0
+            dt, dc = time.perf_counter() - t0, cpu() - c0
             problems = [f"raised {type(exc).__name__}: {exc}".splitlines()[0]]
             items.append(0)
             traceback.print_exc(file=sys.stderr)
@@ -431,6 +482,7 @@ def measure(workload, spark, seconds: float, tr: Tracer):
                 tr.count(k, v)
             sc.setLocalProperty("spark.jobGroup.id", None)
         samples.append(dt)
+        cpus.append(dc)
         traced.append(use_trace)
         if problems:
             failures[j] = problems
@@ -442,7 +494,7 @@ def measure(workload, spark, seconds: float, tr: Tracer):
     for j, problems in sorted(failures.items()):
         for p in problems:
             log(f"FAILED request {j}: {p}")
-    return samples, traced, items, failures
+    return samples, cpus, traced, items, failures
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -467,24 +519,29 @@ def main(argv: list[str] | None = None) -> int:
     tr = Tracer(enabled=bool(args.trace))
     probe = [host_probe_s()]
     try:
-        setups = []
-        spark = None
+        setups, setup_cpus = [], []
+        spark = cpu = None
         for rep in range(SETUP_REPS):
             if spark is not None:
                 spark.stop()
+            c0 = cpu() if cpu else 0.0
             spark, dt = setup(workload, args.seed, work, rep)
             setups.append(dt)
+            if cpu:
+                setup_cpus.append(cpu() - c0)
+            else:
+                cpu = FamilyCPU()  # the first set-up launched the JVM
         # the first requests of a JVM pay class loading, code generation
         # and JIT compilation (the first takes 10-20 s on 4 vCPUs); they run
         # untimed, on scripts or shards no measured request uses
         warm = []
-        for k in range(WARMUP_REQUESTS):
+        for k in range(workload.warmup_requests):
             t0 = time.perf_counter()
             workload.request(spark, -1 - k, Tracer())
             warm.append(time.perf_counter() - t0)
         if tr.enabled:
             tr.py4j = Py4JCounter()
-        samples, traced, items, failures = measure(workload, spark, args.seconds, tr)
+        samples, cpus, traced, items, failures = measure(workload, spark, args.seconds, tr, cpu)
         if tr.py4j:
             tr.py4j.close()
         rss = peak_rss_mb()
@@ -500,6 +557,7 @@ def main(argv: list[str] | None = None) -> int:
     log(f"host_probe_s = {probe[0]:.4f} at start, {probe[1]:.4f} at end")
     log("warmup_request_s = " + " ".join(f"{t:.3f}" for t in warm) + " (untimed)")
     log("request_s = " + " ".join(f"{t:.3f}" for t in samples))
+    log("request_cpu_s = " + " ".join(f"{t:.3f}" for t in cpus))
     log(f"failed_ratio = {len(failures) / attempted:.4f} ({len(failures)}/{attempted})")
     if tr.enabled:
         on = [t for t, f in zip(samples, traced) if f]
@@ -508,21 +566,25 @@ def main(argv: list[str] | None = None) -> int:
         tr.dump(work.parent / f"spans-{args.workload}-{args.seed}.jsonl")
     else:
         p50 = statistics.median(samples)
+        cpu_p50 = statistics.median(cpus)
         # work completed per second of request time; a failed request
         # contributes its time but no work
         done = sum(n for j, n in enumerate(items) if j not in failures)
-        rate = done / sum(samples)
+        rate, cpu_rate = done / sum(samples), done / sum(cpus)
         result["metrics"] = {
-            "request_p50_s": {"value": p50, "unit": "s"},
-            "items_per_s": {"value": rate, "unit": "1/s"},
+            "request_cpu_p50_s": {"value": cpu_p50, "unit": "s"},
+            "items_per_cpu_s": {"value": cpu_rate, "unit": "1/s"},
             "peak_rss_mb": {"value": rss, "unit": "MB"},
-            "setup_s": {"value": statistics.median(setups), "unit": "s"},
+            "setup_s": {"value": statistics.median(setup_cpus), "unit": "s"},
         }
-        log(f"request_p50_s = {p50:.4f} s (n={attempted})")
-        log(f"{workload.unit}_per_s = {rate:.2f} 1/s")
+        log(f"request_p50_s = {p50:.4f} s wall (n={attempted})")
+        log(f"{workload.unit}_per_s = {rate:.2f} 1/s wall")
+        log(f"request_cpu_p50_s = {cpu_p50:.4f} s (n={attempted})")
+        log(f"{workload.unit}_per_cpu_s = {cpu_rate:.2f} 1/s")
         log(f"peak_rss_mb = {rss:.1f} MB")
-        log(f"setup_s = {statistics.median(setups):.3f} s (n={SETUP_REPS}: "
-            + ", ".join(f"{s:.3f}" for s in setups) + ")")
+        log(f"setup_s = {statistics.median(setup_cpus):.3f} s CPU (n={len(setup_cpus)}: "
+            + ", ".join(f"{s:.3f}" for s in setup_cpus) + "; wall, the first "
+            + "launching the JVM: " + ", ".join(f"{s:.3f}" for s in setups) + ")")
     print(json.dumps(result))
     return 0
 
