@@ -27,11 +27,12 @@ from .codegen import (
 )
 from .engine import FameEngine, FameResult, run_script
 from .parser.expressions import column_name, parse_expression
-from .parser.grammar import parse_script, parse_statement
+from .parser.grammar import FameScriptError, parse_script, parse_statement
 
 __all__ = [
     "FameEngine",
     "FameResult",
+    "FameScriptError",
     "column_name",
     "generate_formulas_file",
     "generate_spark_functions",

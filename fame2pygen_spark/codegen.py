@@ -21,11 +21,12 @@ auditable, version-controllable generated code.
 
 Differences from the reference's generated-code shape (deliberate):
 
-* expressions are emitted inline as ``pyspark.sql.functions`` Column
-  algebra (one Catalyst tree per level) rather than routed through
-  helper functions — the helper library from
-  ``generate_spark_functions`` is a user-facing convenience, not a
-  dependency of the generated transformer;
+* expressions are printed as the Spark SQL text of the engine's own
+  lowering (``lowering.py``), each dependency level one ``withColumns``
+  of ``F.expr`` columns — the same strings the engine builds its plan
+  from — rather than routed through helper functions; the helper
+  library from ``generate_spark_functions`` is a user-facing
+  convenience, not a dependency of the generated transformer;
 * frame-level operators (convert / chain / fishvol / nlrx / backcast)
   call into ``fame2pygen_spark`` — exactly as the reference's generated
   code calls into its closed ``polars_econ`` package
@@ -33,24 +34,26 @@ Differences from the reference's generated-code shape (deliberate):
 
 The generated module is differentially tested against the interpreting
 engine in ``tests/test_codegen.py`` — both paths must produce identical
-frames for the master-corpus constructs.
+frames for the master-corpus constructs — and both are checked against
+a pure-Python evaluator in ``tests/test_property_differential.py``.
 """
 
 from __future__ import annotations
 
 from datetime import date as _date
 
+from .lowering import Lowering, ident
 from .parser import expressions as X
+from .parser.expressions import quoted
 from .parser.grammar import (
     ChainStmt, ConvertStmt, FishvolStmt, NlrxStmt, PointInTimeStmt,
     ScalarAssignStmt, SeriesAssignStmt, column_name, parse_script,
     parse_statement,  # noqa: F401  (re-export: parse_fame_formula parity)
 )
-from .parser.expressions import quoted
-from .plans.planner import Plan, PlannedAssign, build_plan, scalar_names
+from .plans.planner import Plan, build_plan, scalar_names
 
-#: reference-parity sentinel (emitter.DATEOF_SENTINEL)
-_DATEOF_KNOWN = {("BEFORE", "ENDING"), ("CONTAIN", "END")}
+#: delimits a Python expression spliced into SQL text at run time
+_HOLE = "\x00"
 
 
 def _date_repr(d: _date) -> str:
@@ -63,261 +66,26 @@ def _scalar_var(name: str) -> str:
     )
 
 
-class _Renderer:
-    """Mirror of ``emitter.emit`` that produces source text instead of
-    live Columns.  ``windowed`` tracking and temp-staging follow the
-    same rules so the generated plan is shape-identical to the
-    interpreted one."""
-
-    def __init__(self, scalars: set[str], renames: dict[str, str],
-                 date_col: str = "DATE"):
-        self.scalars = scalars
-        self.renames = renames
-        self.date_col = date_col
-        self.temps: list[tuple[str, str]] = []  # (name, code)
-        self._n = 0
-
-    def resolve(self, name: str) -> str:
-        col = column_name(name)
-        return quoted(self.renames.get(col, col))
-
-    def stage(self, code: str) -> str:
-        name = f"__stage_{self._n}"
-        self._n += 1
-        self.temps.append((name, code))
-        return f'F.col("{name}")'
-
-    def unwindowed(self, code: str, windowed: bool) -> str:
-        return self.stage(code) if windowed else code
-
-    def shift(self, code: str, offset: int) -> str:
-        if offset == 0:
-            return code
-        if offset > 0:
-            return f"F.lead({code}, {offset}).over(W_ORD)"
-        return f"F.lag({code}, {-offset}).over(W_ORD)"
-
-    # ------------------------------------------------------------- nodes
-
-    def render(self, node: X.Expr) -> tuple[str, bool]:
-        if isinstance(node, X.Num):
-            v = int(node.value) if node.is_int else node.value
-            return f"F.lit({v!r})", False
-        if isinstance(node, X.Str):
-            return f"F.lit({node.value!r})", False
-        if isinstance(node, X.NullLit):
-            return "F.lit(None)", False
-        if isinstance(node, X.DateCol):
-            return f'F.col("{self.date_col}")', False
-        if isinstance(node, X.Ref):
-            key = node.name.lower()
-            if key in self.scalars:
-                if node.offset:
-                    raise ValueError(f"cannot time-index scalar {node.name!r}")
-                return f"F.lit({_scalar_var(node.name)})", False
-            col = f'F.col("{self.resolve(node.name)}")'
-            if node.offset == 0:
-                return col, False
-            return self.shift(col, node.offset), True
-        if isinstance(node, X.DateIndexRef):
-            col = f'F.col("{self.resolve(node.name)}")'
-            picked = (
-                f'F.max(F.when(F.col("{self.date_col}") == '
-                f"F.lit({_date_repr(node.date)}), {col})).over(W_FULL)"
-            )
-            return picked, True
-        if isinstance(node, X.DynLookup):
-            key = node.var.lower()
-            if key not in self.scalars:
-                raise ValueError(
-                    f"dynamic lookup {node.name}[{node.var}] needs scalar"
-                    f" {node.var!r}"
-                )
-            col = f'F.col("{self.resolve(node.name)}")'
-            picked = (
-                f'F.max(F.when(F.col("{self.date_col}") == '
-                f"F.lit({_scalar_var(node.var)}), {col})).over(W_FULL)"
-            )
-            return picked, True
-        if isinstance(node, X.UnaryOp):
-            inner, w = self.render(node.operand)
-            return f"-({inner})", w
-        if isinstance(node, X.BinOp):
-            left, wl = self.render(node.left)
-            right, wr = self.render(node.right)
-            if node.op == "**":
-                return f"F.pow({left}, {right})", wl or wr
-            if node.op == "/":
-                # x/0 → null (emitter.py division semantics)
-                return f"F.try_divide({left}, {right})", wl or wr
-            return f"({left} {node.op} {right})", wl or wr
-        if isinstance(node, X.Compare):
-            # days-since-epoch comparison for ``t <op> <number>``
-            # (Polars Date physical-representation parity — emitter.py)
-            def _nvd(a, b):
-                return isinstance(a, X.DateCol) and isinstance(b, X.Num)
-
-            if _nvd(node.left, node.right) or _nvd(node.right, node.left):
-                def as_days(e):
-                    if isinstance(e, X.DateCol):
-                        return (
-                            f'F.datediff(F.col("{self.date_col}"), '
-                            "F.lit(date(1970, 1, 1)))"
-                        ), False
-                    return self.render(e)
-                left, wl = as_days(node.left)
-                right, wr = as_days(node.right)
-            else:
-                left, wl = self.render(node.left)
-                right, wr = self.render(node.right)
-            return f"({left} {node.op} {right})", wl or wr
-        if isinstance(node, X.BoolOp):
-            # numeric operands coerced to boolean (emitter.py parity)
-            parts, ws = zip(*[self.render(i) for i in node.items])
-            op = " | " if node.op == "or" else " & "
-            return (
-                "(" + op.join(f'({p}).cast("boolean")' for p in parts) + ")",
-                any(ws),
-            )
-        if isinstance(node, X.Not):
-            inner, w = self.render(node.operand)
-            return f'~(({inner}).cast("boolean"))', w
-        if isinstance(node, X.IfExpr):
-            cond, wc = self.render(node.cond)
-            then, wt = self.render(node.then)
-            other, wo = self.render(node.otherwise)
-            return (
-                f'F.when(({cond}).cast("boolean"), {then}).otherwise({other})',
-                wc or wt or wo,
-            )
-        if isinstance(node, X.Func):
-            return self.render_func(node)
-        raise ValueError(f"cannot render {type(node).__name__}")
-
-    def render_func(self, node: X.Func) -> tuple[str, bool]:
-        name, args = node.name, node.args
-
-        if name in ("pct", "diff"):
-            k = 1
-            if name == "pct" and len(args) > 1 and isinstance(args[1], X.Num):
-                k = int(args[1].value)
-            base = args[0]
-            if (isinstance(base, X.Ref)
-                    and base.name.lower() not in self.scalars):
-                col = f'F.col("{self.resolve(base.name)}")'
-                cur = self.shift(col, base.offset)
-                prev = self.shift(col, base.offset - k)
-            else:
-                inner, w = self.render(base)
-                cur = self.unwindowed(inner, w)
-                prev = f"F.lag({cur}, {k}).over(W_ORD)"
-            if name == "pct":
-                return f"(F.try_divide({cur} - {prev}, {prev}) * F.lit(100))", True
-            return f"({cur} - {prev})", True
-
-        if name in ("sqrt", "abs", "log", "exp"):
-            inner, w = self.render(args[0])
-            fn = {"sqrt": "F.sqrt", "abs": "F.abs",
-                  "log": "F.log", "exp": "F.exp"}[name]
-            return f"{fn}({inner})", w
-
-        if name == "lsum":
-            if not args:
-                return "F.lit(0)", False
-            parts, ws = [], False
-            for a in args:
-                inner, w = self.render(a)
-                ws = ws or w
-                parts.append(f"F.coalesce({inner}, F.lit(0))")
-            return "(" + " + ".join(parts) + ")", ws
-
-        if name == "exists":
-            inner, w = self.render(args[0])
-            return f"({inner}).isNotNull()", w
-
-        if name in ("firstvalue", "lastvalue"):
-            inner, w = self.render(args[0])
-            col = self.unwindowed(inner, w)
-            fn = "F.first" if name == "firstvalue" else "F.last"
-            return f"{fn}({col}, ignorenulls=True).over(W_FULL)", True
-
-        if name == "ave":
-            inner, w = self.render(args[0])
-            col = self.unwindowed(inner, w)
-            return f"F.avg({col}).over(W_FULL)", True
-
-        if name == "sum" and len(args) == 1:
-            inner, w = self.render(args[0])
-            col = self.unwindowed(inner, w)
-            return f"F.sum({col}).over(W_FULL)", True
-
-        if name in ("min", "max"):
-            if len(args) >= 2:
-                rendered = [self.render(a) for a in args]
-                fn = "F.least" if name == "min" else "F.greatest"
-                inner = ", ".join(r[0] for r in rendered)
-                return f"{fn}({inner})", any(r[1] for r in rendered)
-            inner, w = self.render(args[0])
-            col = self.unwindowed(inner, w)
-            fn = "F.min" if name == "min" else "F.max"
-            return f"{fn}({col}).over(W_FULL)", True
-
-        if name == "dateof":
-            def suffix(a: X.Expr) -> str:
-                if isinstance(a, X.Ref):
-                    return a.name.upper()
-                if isinstance(a, X.Str):
-                    return a.value.upper()
-                return ""
-            if len(args) >= 3:
-                which, when = suffix(args[-2]), suffix(args[-1])
-                if (which, when) in _DATEOF_KNOWN:
-                    return "F.lit(date(9999, 12, 31))", False
-                return "F.lit(None)", False
-            if args:
-                return self.render(args[0])
-            return "F.lit(None)", False
-
-        if name == "make":
-            for a in args:
-                if isinstance(a, X.Str):
-                    from .parser.dates import parse_fame_date
-
-                    d = parse_fame_date(a.value)
-                    return f"F.lit({_date_repr(d)})", False
-            return "F.lit(None)", False
-
-        if name == "date":
-            return "F.lit(None)", False
-
-        raise ValueError(f"unknown FAME function {name!r}")
+def _hole(py_expr: str) -> str:
+    return f"{_HOLE}{py_expr}{_HOLE}"
 
 
-# ---------------------------------------------------------------- helpers
+def _py(sql: str) -> str:
+    """SQL text, with any holes, as a Python string expression."""
+    parts = sql.split(_HOLE)
+    return " + ".join(
+        f"({p})" if i % 2 else repr(p)
+        for i, p in enumerate(parts) if p or i % 2
+    )
 
 
-def _window_cond_code(window, date_col: str) -> str:
-    start, end = window
-    d = f'F.col("{date_col}")'
-    if start is not None and end is not None:
-        return f"{d}.between(F.lit({_date_repr(start)}), F.lit({_date_repr(end)}))"
-    if start is not None:
-        return f"({d} >= F.lit({_date_repr(start)}))"
-    if end is not None:
-        return f"({d} <= F.lit({_date_repr(end)}))"
-    return "F.lit(True)"
+class _SourceLowering(Lowering):
+    """The engine's lowering for generated code: scalars are variables
+    of the generated module, and whether a target already has prior
+    values is decided when it runs — input columns are unknown here."""
 
-
-def _fallback_code(target: str) -> str:
-    """Prior-value fallback, decided at runtime like the engine does —
-    input columns are unknown at generation time."""
-    return (f'(F.col("{quoted(target)}") if "{target}" in df.columns'
-            " else F.lit(None))")
-
-
-def _apply_filter_code(expr: str, target: str, window, date_col: str) -> str:
-    cond = _window_cond_code(window, date_col)
-    return f"F.when({cond}, {expr}).otherwise({_fallback_code(target)})"
+    def prior(self, col: str) -> str:
+        return _hole(f"{ident(col)!r} if {col!r} in df.columns else 'NULL'")
 
 
 class _Lines:
@@ -328,17 +96,22 @@ class _Lines:
         self.out.append("    " * indent + line if line else "")
 
 
-def _emit_temps(r: _Renderer, lines: _Lines) -> list[str]:
-    """Flush staged temp columns; returns their names for dropping."""
-    names = []
-    if r.temps:
-        lines.add("df = df.withColumns({")
-        for name, code in r.temps:
-            lines.add(f'    "{name}": {code},')
-            names.append(name)
-        lines.add("})")
-        r.temps = []
-    return names
+def _print_with_columns(lines: _Lines, out: str, batch: dict[str, str]) -> None:
+    lines.add(f"{out} = df.withColumns({{")
+    for name, text in batch.items():
+        lines.add(f"    {name!r}: F.expr({_py(text)}),")
+    lines.add("})")
+
+
+def _with_columns(lines: _Lines, low: Lowering,
+                  updates: dict[str, str]) -> None:
+    """Print the engine's ``_apply``: staged temporaries, then *updates*."""
+    temps = low.take_temps()
+    if temps:
+        _print_with_columns(lines, "df", temps)
+    _print_with_columns(lines, "df", updates)
+    if temps:
+        lines.add(f"df = df.drop({', '.join(map(repr, temps))})")
 
 
 # ------------------------------------------------------------ public API
@@ -356,25 +129,28 @@ def generate_test_script(
     ``ts_transformer(df: DataFrame) -> DataFrame``."""
     plan = build_plan(parse_script(cmds))
     scalars = scalar_names(plan)
+    low = _SourceLowering(
+        date_col, tuple(entity_cols), renames=plan.convert_renames,
+        scalars={n: _hole(f"sql_literal({_scalar_var(n)})") for n in scalars},
+    )
     lines = _Lines()
-    known_cols: set[str] = set()  # columns assigned so far (inputs unknown)
 
     ents = ", ".join(f'"{e}"' for e in entity_cols)
+    lit_import = (
+        "from fame2pygen_spark.lowering import sql_literal\n" if scalars else ""
+    )
     header = f'''"""Generated by fame2pygen_spark.codegen — do not edit.
 
-Replays the FAME script below as one PySpark DataFrame chain; frame-
+Replays the FAME script below as one PySpark DataFrame chain: each
+dependency level is one withColumns of Spark SQL expressions; frame-
 level operators call into fame2pygen_spark (as the reference's
 generated code calls into polars_econ).
 """
 
 from datetime import date
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-W_ORD = Window.partitionBy({ents}).orderBy("{date_col}")
-W_FULL = W_ORD.rowsBetween(Window.unboundedPreceding,
-                           Window.unboundedFollowing)
-
+from pyspark.sql import DataFrame, functions as F
+{lit_import}
 
 def ts_transformer(df: DataFrame) -> DataFrame:
 '''
@@ -399,7 +175,6 @@ def ts_transformer(df: DataFrame) -> DataFrame:
             f'{_date_repr(end)}, date_col="{date_col}", '
             f"entity_cols=({ents}))"
         )
-        known_cols.update(t for t, _ in pairs)
 
     # 2. convert bridge
     if plan.convert_groups:
@@ -421,47 +196,29 @@ def ts_transformer(df: DataFrame) -> DataFrame:
                 lines.add(f'if "{meta.out_column}" in df.columns:')
                 lines.add(f'    df = df.drop("{meta.out_column}")')
                 lines.add(f'df = df.join(conv, on={join_on}, how="full")')
-                known_cols.add(meta.out_column)
 
     # 3. levels
     for stage in plan.schedule:
-        batch: list[PlannedAssign] = []
+        batch: dict[str, str] = {}
 
         def flush():
-            nonlocal batch
-            if not batch:
-                return
-            r = _Renderer(scalars, plan.convert_renames, date_col)
-            rendered: list[tuple[str, str]] = []
-            for pa in batch:
-                stmt: SeriesAssignStmt = pa.stmt  # type: ignore[assignment]
-                code, _w = r.render(stmt.expr)
-                if pa.date_filter is not None:
-                    code = _apply_filter_code(
-                        code, pa.column, pa.date_filter, date_col,
-                    )
-                rendered.append((pa.column, code))
-            temp_names = _emit_temps(r, lines)
-            lines.add("df = df.withColumns({")
-            for colname, code in rendered:
-                lines.add(f'    "{colname}": {code},')
-                known_cols.add(colname)
-            lines.add("})")
-            if temp_names:
-                drops = ", ".join(f'"{t}"' for t in temp_names)
-                lines.add(f"df = df.drop({drops})")
-            batch = []
+            if batch:
+                _with_columns(lines, low, dict(batch))
+                batch.clear()
 
         for pa in stage:
             stmt = pa.stmt
             if isinstance(stmt, SeriesAssignStmt):
-                if any(b.column == pa.column for b in batch):
-                    flush()
-                batch.append(pa)
+                if pa.column in batch:
+                    flush()  # same target reassigned → sequential
+                text = low.lower(stmt.expr, stmt.line)
+                if pa.date_filter is not None:
+                    text = low.scoped(text, pa.date_filter, pa.column)
+                batch[pa.column] = text
                 continue
             flush()
             if isinstance(stmt, ScalarAssignStmt):
-                _emit_scalar(stmt, scalars, plan, lines, date_col)
+                _emit_scalar(stmt, plan, low, lines)
             elif isinstance(stmt, ChainStmt):
                 lines.add("from fame2pygen_spark.functions.econ import chain_index")
                 out = column_name(stmt.target)
@@ -470,7 +227,6 @@ def ts_transformer(df: DataFrame) -> DataFrame:
                     f'"{out}", date_col="{date_col}", entity_cols=({ents}))'
                 )
                 lines.add('df = df.drop("__y")')
-                known_cols.add(out)
             elif isinstance(stmt, FishvolStmt):
                 lines.add("from fame2pygen_spark.functions.econ import fisher_volume")
                 out = column_name(stmt.target)
@@ -479,7 +235,6 @@ def ts_transformer(df: DataFrame) -> DataFrame:
                     f"df = fisher_volume(df, {pairs!r}, {stmt.base_year}, "
                     f'"{out}", date_col="{date_col}", entity_cols=({ents}))'
                 )
-                known_cols.add(out)
             elif isinstance(stmt, NlrxStmt):
                 lines.add("from fame2pygen_spark.functions.nlrx import nlrx")
                 out = column_name(stmt.target)
@@ -493,25 +248,15 @@ def ts_transformer(df: DataFrame) -> DataFrame:
                     f"{tuple(series[1:])!r}, \"{out}\", "
                     f'date_col="{date_col}", entity_cols=({ents}))'
                 )
-                known_cols.add(out)
         flush()
 
     # 4. point-in-time upserts
     for target_col in sorted(plan.pit_by_target):
         for pa in plan.pit_by_target[target_col]:
             stmt: PointInTimeStmt = pa.stmt  # type: ignore[assignment]
-            r = _Renderer(scalars, plan.convert_renames, date_col)
-            code, _w = r.render(stmt.expr)
-            temp_names = _emit_temps(r, lines)
-            lines.add(
-                f'df = df.withColumn("{target_col}", '
-                f'F.when(F.col("{date_col}") == F.lit({_date_repr(stmt.date)}),'
-                f" {code}).otherwise({_fallback_code(target_col)}))"
-            )
-            if temp_names:
-                drops = ", ".join(f'"{t}"' for t in temp_names)
-                lines.add(f"df = df.drop({drops})")
-            known_cols.add(target_col)
+            text = low.lower(stmt.expr, stmt.line)
+            update = low.at_date(stmt.date, text, target_col)
+            _with_columns(lines, low, {target_col: update})
 
     lines.add("return df")
     body = "\n".join(lines.out) if lines.out else "    return df"
@@ -530,9 +275,10 @@ def _expand_fishvol_pairs(stmt: FishvolStmt, plan: Plan):
     return tuple(expanded)
 
 
-def _emit_scalar(stmt: ScalarAssignStmt, scalars: set[str], plan: Plan,
-                 lines: _Lines, date_col: str) -> None:
+def _emit_scalar(stmt: ScalarAssignStmt, plan: Plan, low: Lowering,
+                 lines: _Lines) -> None:
     var = _scalar_var(stmt.target)
+    date_col = low.date_col
     if isinstance(stmt.expr, X.DynLookup):
         col = column_name(stmt.expr.name)
         col = plan.convert_renames.get(col, col)
@@ -543,19 +289,15 @@ def _emit_scalar(stmt: ScalarAssignStmt, scalars: set[str], plan: Plan,
         )
         lines.add(f'{var} = _row["v"] if _row else None')
         return
-    r = _Renderer(scalars, plan.convert_renames, date_col)
-    code, _w = r.render(stmt.expr)
-    if r.temps:
-        lines.add("_probe = df.withColumns({")
-        for name, tcode in r.temps:
-            lines.add(f'    "{name}": {tcode},')
-        lines.add("})")
-        r.temps = []
+    text = low.lower(stmt.expr, stmt.line)
+    temps = low.take_temps()
+    if temps:
+        _print_with_columns(lines, "_probe", temps)
     else:
         lines.add("_probe = df")
     lines.add(
         f'_row = _probe.orderBy("{date_col}")'
-        f'.select(({code}).alias("v")).first()'
+        f'.select(F.expr({_py(text)}).alias("v")).first()'
     )
     lines.add(f'{var} = _row["v"] if _row else None')
 

@@ -15,9 +15,19 @@ Execution order (mirrors the reference, ``fame2py_converter.py:303-766``):
 2. CONVERT frequency bridge, grouped by (freq, technique, observed,
    start_by) (``:330-409``), with later references rewritten to the
    suffixed columns (``:411-415``)
-3. dependency levels — each level one batched ``withColumns``
+3. dependency levels — each level's expressions lowered to Spark SQL
+   text (``lowering.py``) and applied as one ``withColumns`` of
+   ``F.expr`` columns, after one ``withColumns`` of any staged
+   temporaries; scalars are eager ``.first()`` probes inlined as typed
+   literals into later levels
 4. point-in-time upserts, grouped per target (``:700-745``)
 5. local-database extraction (``:747-761``)
+
+The frame's columns are tracked in Python: ``df.columns`` is read once
+at the start and once after each frame-level operator (backcast,
+convert bridge, chain, fishvol, nlrx), never per level.  A reference to
+a series the frame does not have raises ``FameScriptError`` naming the
+FAME line, before Spark analyses anything.
 
 Documented divergences from the reference (each is deliberate):
 
@@ -41,13 +51,14 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import date as _date
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .emitter import EmitContext, emit
+from .lowering import Lowering, ident, sql_literal
 from .parser.expressions import DynLookup, quoted
 from .parser.grammar import (
-    ChainStmt, ConvertStmt, FishvolStmt, NlrxStmt, PointInTimeStmt,
-    ScalarAssignStmt, SeriesAssignStmt, Stmt, column_name, parse_script,
+    ChainStmt, ConvertStmt, FameScriptError, FishvolStmt, NlrxStmt,
+    PointInTimeStmt, ScalarAssignStmt, SeriesAssignStmt, column_name,
+    parse_script,
 )
 from .plans.planner import Plan, PlannedAssign, build_plan
 
@@ -76,7 +87,6 @@ class FameEngine:
         self.entity_cols = tuple(entity_cols)
         self.backcast_window = backcast_window
         self.default_freq = default_freq
-        self._tmp_counter = 0
 
     # ------------------------------------------------------------ public
 
@@ -120,65 +130,40 @@ class FameEngine:
         ):
             df = df.localCheckpoint(eager=True)
 
-        df = self._run_backcasts(df, plan)
-        df = self._run_convert_bridge(df, plan)
+        low = Lowering(self.date_col, self.entity_cols,
+                       renames=plan.convert_renames, columns=_schema(df))
+        if plan.backcasts:
+            df = self._run_backcasts(df, plan)
+            low.columns = _schema(df)
+        if plan.convert_groups:
+            df = self._run_convert_bridge(df, plan, low)
+            low.columns = _schema(df)
 
         for stage in plan.schedule:
-            df = self._run_stage(df, stage, plan, scalars)
+            df = self._run_stage(df, stage, plan, scalars, low)
 
-        df = self._run_point_in_time(df, plan, scalars)
-        local_dbs = self._extract_local_dbs(df, plan)
+        df = self._run_point_in_time(df, plan, low)
+        local_dbs = self._extract_local_dbs(df, plan, low)
         return FameResult(df, scalars, local_dbs, dict(plan.convert_renames))
 
     # ------------------------------------------------------- infrastructure
 
-    def _ctx(self, df: DataFrame, plan: Plan, scalars: dict,
-             temps: dict[str, Column]) -> EmitContext:
-        def stage(col: Column) -> Column:
-            name = f"__stage_{self._tmp_counter}"
-            self._tmp_counter += 1
-            temps[name] = col
-            return F.col(name)
-
-        return EmitContext(
-            date_col=self.date_col,
-            entity_cols=self.entity_cols,
-            scalars=scalars,
-            columns=set(df.columns),
-            renames=plan.convert_renames,
-            stage=stage,
-        )
-
-    def _window_cond(self, window: tuple[_date | None, _date | None]) -> Column:
-        start, end = window
-        d = F.col(self.date_col)
-        if start is not None and end is not None:
-            return d.between(F.lit(start), F.lit(end))
-        if start is not None:
-            return d >= F.lit(start)
-        if end is not None:
-            return d <= F.lit(end)
-        return F.lit(True)
-
-    def _apply_date_filter(
-        self,
-        expr: Column,
-        target_col: str,
-        window: tuple[_date | None, _date | None],
-        existing: bool,
-    ) -> Column:
-        """Reference APPLY_DATE_FILTER semantics
-        (``formulas_generator.py:1499-1536``): inside the window the
-        expression applies; outside, prior values are preserved when the
-        column already exists, else null."""
-        fallback = F.col(quoted(target_col)) if existing else F.lit(None)
-        return F.when(self._window_cond(window), expr).otherwise(fallback)
+    @staticmethod
+    def _apply(df: DataFrame, low: Lowering, updates: dict[str, str]) -> DataFrame:
+        """One ``withColumns`` for the staged temporaries, then one for
+        *updates* (column -> SQL text); the temporaries are dropped."""
+        temps = low.take_temps()
+        if temps:
+            df = df.withColumns({n: F.expr(t) for n, t in temps.items()})
+        df = df.withColumns({c: F.expr(t) for c, t in updates.items()})
+        if temps:
+            df = df.drop(*temps)
+        low.track(updates)
+        return df
 
     # ------------------------------------------------------------- stages
 
     def _run_backcasts(self, df: DataFrame, plan: Plan) -> DataFrame:
-        if not plan.backcasts:
-            return df
         from .functions.econ import backcast
 
         pairs = [
@@ -205,9 +190,9 @@ class FameEngine:
             date_col=self.date_col, entity_cols=self.entity_cols,
         )
 
-    def _run_convert_bridge(self, df: DataFrame, plan: Plan) -> DataFrame:
-        if not plan.convert_groups:
-            return df
+    def _run_convert_bridge(
+        self, df: DataFrame, plan: Plan, low: Lowering
+    ) -> DataFrame:
         from .operators.convert import convert_series, infer_frequency
 
         # All converts read from the pre-bridge frame (their sources are
@@ -266,10 +251,11 @@ class FameEngine:
                         entity_cols=self.entity_cols,
                     )
                     drops = [m.out_column for m in metas
-                             if m.out_column in df.columns]
+                             if low.has(m.out_column)]
                     if drops:
                         df = df.drop(*drops)
                     df = df.join(conv, on=join_keys, how="full")
+                    low.track(m.out_column for m in metas)
                     continue
                 for meta in metas:
                     conv = convert_series(
@@ -278,9 +264,10 @@ class FameEngine:
                         source_freq=source_freq,
                         entity_cols=self.entity_cols,
                     )
-                    if meta.out_column in df.columns:
+                    if low.has(meta.out_column):
                         df = df.drop(meta.out_column)
                     df = df.join(conv, on=join_keys, how="full")
+                    low.track([meta.out_column])
         return df
 
     def _run_stage(
@@ -289,13 +276,14 @@ class FameEngine:
         stage: list[PlannedAssign],
         plan: Plan,
         scalars: dict[str, object],
+        low: Lowering,
     ) -> DataFrame:
         batch: list[PlannedAssign] = []
 
         def flush(frame: DataFrame) -> DataFrame:
             nonlocal batch
             if batch:
-                frame = self._apply_batch(frame, batch, plan, scalars)
+                frame = self._apply_batch(frame, batch, low)
                 batch = []
             return frame
 
@@ -309,58 +297,48 @@ class FameEngine:
 
             df = flush(df)
             if isinstance(stmt, ScalarAssignStmt):
-                scalars[stmt.target.lower()] = self._eval_scalar(
-                    df, stmt, plan, scalars
-                )
-            elif isinstance(stmt, ChainStmt):
-                df = self._run_chain(df, pa, plan, scalars)
+                key = stmt.target.lower()
+                scalars[key] = self._eval_scalar(df, stmt, scalars, low)
+                low.scalars[key] = sql_literal(scalars[key])
+                continue
+            if isinstance(stmt, ChainStmt):
+                df = self._run_chain(df, pa, low)
             elif isinstance(stmt, FishvolStmt):
-                df = self._run_fishvol(df, pa, plan, scalars)
+                df = self._run_fishvol(df, pa, plan, low)
             elif isinstance(stmt, NlrxStmt):
                 df = self._run_nlrx(df, pa, scalars)
             else:  # pragma: no cover
                 raise ValueError(f"unexpected statement in stage: {stmt}")
+            low.columns = _schema(df)
         return flush(df)
 
     def _apply_batch(
-        self,
-        df: DataFrame,
-        batch: list[PlannedAssign],
-        plan: Plan,
-        scalars: dict[str, object],
+        self, df: DataFrame, batch: list[PlannedAssign], low: Lowering
     ) -> DataFrame:
-        temps: dict[str, Column] = {}
-        ctx = self._ctx(df, plan, scalars, temps)
-        updates: dict[str, Column] = {}
+        updates: dict[str, str] = {}
         for pa in batch:
             stmt: SeriesAssignStmt = pa.stmt  # type: ignore[assignment]
-            emitted = emit(stmt.expr, ctx)
-            col = emitted.col
+            text = low.lower(stmt.expr, stmt.line)
             if pa.date_filter is not None:
-                col = self._apply_date_filter(
-                    col, pa.column, pa.date_filter, pa.column in ctx.columns
-                )
-            updates[pa.column] = col
-        if temps:
-            df = df.withColumns(temps)
-        df = df.withColumns(updates)
-        if temps:
-            df = df.drop(*temps.keys())
-        return df
+                text = low.scoped(text, pa.date_filter, pa.column)
+            updates[pa.column] = text
+        return self._apply(df, low, updates)
 
     def _eval_scalar(
         self,
         df: DataFrame,
         stmt: ScalarAssignStmt,
-        plan: Plan,
         scalars: dict[str, object],
+        low: Lowering,
     ) -> object:
         # dynamic lookup: x = ser[scalar_var] → value at that date
         # (reference ``fame2py_converter.py:497-503``)
         if isinstance(stmt.expr, DynLookup):
             var = stmt.expr.var.lower()
             if var not in scalars:
-                raise ValueError(f"scalar {stmt.expr.var!r} not defined")
+                raise FameScriptError(
+                    f"scalar {stmt.expr.var!r} not defined", stmt.line
+                )
             row = (
                 df.where(F.col(self.date_col) == F.lit(scalars[var]))
                 .select(F.col(quoted(column_name(stmt.expr.name))).alias("v"))
@@ -368,18 +346,27 @@ class FameEngine:
             )
             return row["v"] if row else None
 
-        temps: dict[str, Column] = {}
-        ctx = self._ctx(df, plan, scalars, temps)
-        emitted = emit(stmt.expr, ctx)
-        probe = df.withColumns(temps) if temps else df
+        text = low.lower(stmt.expr, stmt.line)
+        temps = low.take_temps()
+        probe = (
+            df.withColumns({n: F.expr(t) for n, t in temps.items()})
+            if temps else df
+        )
         row = (
             probe.orderBy(self.date_col)
-            .select(emitted.col.alias("v"))
+            .select(F.expr(text).alias("v"))
             .first()
         )
         return row["v"] if row else None
 
-    def _run_chain(self, df, pa, plan, scalars) -> DataFrame:
+    def _scoped_output(self, pa, out: str, tmp: str, low: Lowering):
+        """The frame-level operator's output column *tmp*, scoped to the
+        statement's date window."""
+        if pa.date_filter is None:
+            return F.col(tmp)
+        return F.expr(low.scoped(ident(tmp), pa.date_filter, out))
+
+    def _run_chain(self, df, pa, low: Lowering) -> DataFrame:
         from .functions.econ import chain_index
 
         stmt: ChainStmt = pa.stmt
@@ -388,14 +375,10 @@ class FameEngine:
             df, stmt.terms, stmt.base_year, "__chain_out",
             date_col=self.date_col, entity_cols=self.entity_cols,
         )
-        col = F.col("__chain_out")
-        if pa.date_filter is not None:
-            col = self._apply_date_filter(
-                col, out, pa.date_filter, out in df.columns
-            )
+        col = self._scoped_output(pa, out, "__chain_out", low)
         return result.withColumn(out, col).drop("__chain_out", "__y")
 
-    def _run_fishvol(self, df, pa, plan, scalars) -> DataFrame:
+    def _run_fishvol(self, df, pa, plan, low: Lowering) -> DataFrame:
         from .functions.econ import fisher_volume
 
         stmt: FishvolStmt = pa.stmt
@@ -415,11 +398,7 @@ class FameEngine:
             df, tuple(expanded), stmt.base_year, "__fish_out",
             date_col=self.date_col, entity_cols=self.entity_cols,
         )
-        col = F.col("__fish_out")
-        if pa.date_filter is not None:
-            col = self._apply_date_filter(
-                col, out, pa.date_filter, out in df.columns
-            )
+        col = self._scoped_output(pa, out, "__fish_out", low)
         return result.withColumn(out, col).drop("__fish_out")
 
     def _run_nlrx(self, df, pa, scalars) -> DataFrame:
@@ -449,41 +428,34 @@ class FameEngine:
         )
 
     def _run_point_in_time(
-        self, df: DataFrame, plan: Plan, scalars: dict[str, object]
+        self, df: DataFrame, plan: Plan, low: Lowering
     ) -> DataFrame:
-        if not plan.pit_by_target:
-            return df
         # sequential per statement: later upserts see earlier results and
         # the last write to a date wins (documented divergence)
         for target_col in sorted(plan.pit_by_target):
             for pa in plan.pit_by_target[target_col]:
                 stmt: PointInTimeStmt = pa.stmt  # type: ignore[assignment]
-                temps: dict[str, Column] = {}
-                ctx = self._ctx(df, plan, scalars, temps)
-                emitted = emit(stmt.expr, ctx)
-                existing = target_col in ctx.columns
-                fallback = F.col(quoted(target_col)) if existing else F.lit(None)
-                update = F.when(
-                    F.col(self.date_col) == F.lit(stmt.date), emitted.col
-                ).otherwise(fallback)
-                if temps:
-                    df = df.withColumns(temps)
-                df = df.withColumn(target_col, update)
-                if temps:
-                    df = df.drop(*temps.keys())
+                text = low.lower(stmt.expr, stmt.line)
+                update = low.at_date(stmt.date, text, target_col)
+                df = self._apply(df, low, {target_col: update})
         return df
 
-    def _extract_local_dbs(self, df: DataFrame, plan: Plan):
+    def _extract_local_dbs(self, df: DataFrame, plan: Plan, low: Lowering):
         out: dict[str, DataFrame] = {}
         for db, series in sorted(plan.local_dbs.items()):
-            cols = [F.col(self.date_col)] if self.date_col in df.columns else []
+            cols = [F.col(self.date_col)] if low.has(self.date_col) else []
             for s in sorted(series):
                 prefixed = f"{db}_{s}"
-                if prefixed in df.columns:
+                if low.has(prefixed):
                     cols.append(F.col(quoted(prefixed)).alias(s))
             if cols:
                 out[db] = df.select(*cols)
         return out
+
+
+def _schema(df: DataFrame) -> dict[str, str]:
+    """The frame's columns, lower-cased name -> name (one JVM read)."""
+    return {c.lower(): c for c in df.columns}
 
 
 def run_script(

@@ -2,9 +2,10 @@
 
 The reference renders expressions with regex substitution into Polars
 source strings (``/root/reference/fame2pygen/formulas_generator.py:714-917``).
-We instead parse into a typed AST and later *interpret* the AST into
-PySpark ``Column`` objects (see ``fame2pygen_spark.emitter``) — no code
-generation, and Catalyst sees one declarative plan.
+We instead parse into a typed AST, which ``fame2pygen_spark.lowering``
+lowers once to Spark SQL expression text: the engine applies it with
+``F.expr`` and the codegen backend prints it, so Catalyst sees one
+declarative plan either way.
 
 Grammar (case-insensitive keywords)::
 

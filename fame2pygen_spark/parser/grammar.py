@@ -124,6 +124,15 @@ class ConvertMeta:
 # ------------------------------------------------------------ statement IR
 
 
+class FameScriptError(ValueError):
+    """A FAME script that cannot run, reported before any Spark work,
+    with the text of the statement at fault in ``line``."""
+
+    def __init__(self, message: str, line: str = ""):
+        self.line = line
+        super().__init__(f"{message} in FAME line {line!r}" if line else message)
+
+
 @dataclass(frozen=True)
 class Stmt:
     line: str = field(default="", kw_only=True, compare=False)
@@ -431,9 +440,10 @@ def statement_refs(stmt: Stmt) -> list[str]:
 
 
 __all__ = [
-    "ChainStmt", "ConvertMeta", "ConvertStmt", "DateFilterStmt", "FishvolStmt",
-    "FreqStmt", "FREQ_INFO", "ListAliasStmt", "NlrxStmt", "PointInTimeStmt",
-    "ScalarAssignStmt", "SeriesAssignStmt", "Stmt", "column_name",
+    "ChainStmt", "ConvertMeta", "ConvertStmt", "DateFilterStmt",
+    "FameScriptError", "FishvolStmt", "FreqStmt", "FREQ_INFO",
+    "ListAliasStmt", "NlrxStmt", "PointInTimeStmt", "ScalarAssignStmt",
+    "SeriesAssignStmt", "Stmt", "column_name",
     "normalize_frequency", "parse_script", "parse_statement", "split_local_db",
     "statement_refs",
 ]

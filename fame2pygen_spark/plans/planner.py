@@ -191,13 +191,10 @@ def build_plan(stmts: list[Stmt]) -> Plan:
 
     level_assigns = [pa for pa in plan.assigns if id(pa) not in handled]
 
-    nodes: list[str] = []
-    seen_nodes: set[str] = set()
+    #: target -> line of its first statement, for cycle errors
+    first_line: dict[str, str] = {}
     for pa in level_assigns:
-        key = pa.target_key
-        if key not in seen_nodes:
-            seen_nodes.add(key)
-            nodes.append(key)
+        first_line.setdefault(pa.target_key, pa.stmt.line)
 
     edges: dict[str, set[str]] = defaultdict(set)
     for pa in level_assigns:
@@ -210,10 +207,10 @@ def build_plan(stmts: list[Stmt]) -> Plan:
             members = plan.list_aliases.get(ref_key, (ref,))
             for member in members:
                 mk = member.lower()
-                if mk != tgt and mk in seen_nodes:
+                if mk != tgt and mk in first_line:
                     edges[mk].add(tgt)
 
-    plan.levels = build_dependency_levels(nodes, edges)
+    plan.levels = build_dependency_levels(first_line, edges)
 
     # -- schedule: per level, planned assigns in original order
     by_target: dict[str, list[PlannedAssign]] = defaultdict(list)

@@ -9,6 +9,7 @@ of generated code strings.
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import math
 
 import pytest
@@ -69,7 +70,7 @@ def test_pct_and_diff(spark, ts_monthly):
 def test_pct_diff_on_dotted_name(spark):
     # FAME dot targets (RESULT.A) are flat columns; the pct/diff offset
     # fast path must backtick-quote them instead of resolving a struct
-    # field (same quoting as the plain Ref path, emitter.py:121)
+    # field (every identifier is backticked, lowering.py ``ident``)
     df = spark.createDataFrame(
         [(dt.date(2020, m, 1), float(m * 10)) for m in range(1, 5)],
         "DATE date, A double",
@@ -407,3 +408,273 @@ def test_materialize_base_conf_flips_plan_not_results(spark):
     lazy_rows = sorted(res_lazy.df.collect(), key=key)
     mat_rows = sorted(res_mat.df.collect(), key=key)
     assert [tuple(r) for r in lazy_rows] == [tuple(r) for r in mat_rows]
+
+
+# ------------------------------------------------ lowering to Spark SQL
+
+
+def _lowered_frame(spark):
+    return spark.createDataFrame(
+        [(dt.date(2020, m, 1), float(m), float(m) - 3.0, 2.0 * m)
+         for m in range(1, 5)],
+        "DATE date, A double, B double, `RESULT.A` double",
+    )
+
+
+@pytest.mark.parametrize(
+    "value",
+    [0.5, -0.5, -0.0, 1e-300, 1.5e300, 3, -3, 2**40, -(2**40),
+     dt.date(2020, 2, 29), dt.datetime(2020, 2, 29, 13, 5, 7, 250),
+     "it's", "back\\slash", "", None, True,
+     __import__("decimal").Decimal("-12.50")],
+    ids=repr,
+)
+def test_sql_literal_keeps_the_type_and_value_of_lit(spark, value):
+    from pyspark.sql import functions as F
+
+    from fame2pygen_spark.lowering import sql_literal
+
+    got = spark.range(1).select(F.expr(sql_literal(value)).alias("x"))
+    want = spark.range(1).select(F.lit(value).alias("x"))
+    assert got.schema == want.schema
+    g, w = got.first()["x"], want.first()["x"]
+    assert g == w and str(g) == str(w)  # -0.0 keeps its sign
+
+
+@pytest.mark.parametrize("value", [math.nan, math.inf, -math.inf])
+def test_sql_literal_non_finite_doubles(spark, value):
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType
+
+    from fame2pygen_spark.lowering import sql_literal
+
+    df = spark.range(1).select(F.expr(sql_literal(value)).alias("x"))
+    assert df.schema["x"].dataType == DoubleType()
+    got = df.first()["x"]
+    assert (math.isnan(got) and math.isnan(value)) or got == value
+
+
+def test_float_literals_stay_double(spark):
+    from pyspark.sql.types import DoubleType, IntegerType
+
+    df = _lowered_frame(spark)
+    res = run_script(df, ["h = 0.5", "v = a * 0.1", "n = 3"]).df
+    assert res.schema["H"].dataType == DoubleType()
+    assert res.schema["V"].dataType == DoubleType()
+    assert res.schema["N"].dataType == IntegerType()
+    # 0.1 as DECIMAL would give exactly 0.3 for a = 3
+    assert by_date(res, "V")[2] == (3.0 * 0.1,)
+
+
+def test_identifiers_are_backticked(spark):
+    from pyspark.sql import functions as F
+
+    from fame2pygen_spark.lowering import ident
+
+    assert ident("a`b") == "`a``b`"
+    odd = spark.createDataFrame([(1.0,)], "`a``b` double")
+    assert odd.select(F.expr(ident("a`b") + " * 2").alias("x")).first()["x"] == 2.0
+    # series named like SQL keywords, and a FAME dot name
+    df = _lowered_frame(spark)
+    res = run_script(df, ["end = a + 1", "case = end * 2", "select = result.a - case"])
+    assert by_date(res.df, "END", "CASE", "SELECT")[0] == (2.0, 4.0, -2.0)
+
+
+def test_log_is_natural_log(spark):
+    from fame2pygen_spark.lowering import Lowering
+    from fame2pygen_spark.parser.expressions import parse_expression
+
+    assert Lowering().lower(parse_expression("log(a)")) == "ln(`A`)"
+    res = run_script(_lowered_frame(spark), ["l = log(exp(a))", "m = log(b)"])
+    rows = by_date(res.df, "L", "M")
+    assert rows[1][0] == pytest.approx(2.0)
+    assert rows[0][1] is None  # ln of a negative number is NULL in Spark
+
+
+def test_string_literals_escape_quotes(spark):
+    res = run_script(
+        _lowered_frame(spark),
+        ['s = "it\'s"', 'q = "a\\b"', 'p = if a gt 2 then "x\'\'y" else "z"'],
+    )
+    row = res.df.orderBy("DATE").collect()[-1]
+    assert (row["S"], row["Q"], row["P"]) == ("it's", "a\\b", "x''y")
+
+
+def test_scalar_literals_keep_their_types(spark):
+    from fame2pygen_spark import FameEngine
+    from fame2pygen_spark.plans.planner import build_plan
+    from fame2pygen_spark.parser.grammar import parse_script
+
+    df = _lowered_frame(spark)
+    res = FameEngine().execute(df, build_plan(parse_script([
+        "scalar f = ave(a)",
+        "scalar i = 7",
+        'scalar d = make(date(m), "2020-03-01")',
+        'scalar s = "it\'s"',
+        "scalar n = nd",
+        "vf = f", "vi = i", "vd = d", "vs = s", "vn = n",
+        "picked = a[d]",
+    ])))
+    assert res.scalars == {"f": 2.5, "i": 7, "d": dt.date(2020, 3, 1),
+                           "s": "it's", "n": None}
+    types = dict(res.df.dtypes)
+    assert (types["VF"], types["VI"], types["VD"], types["VS"], types["VN"]) == (
+        "double", "int", "date", "string", "void")
+    assert by_date(res.df, "VF", "VI", "VD", "VS", "PICKED")[0] == (
+        2.5, 7, dt.date(2020, 3, 1), "it's", 3.0)
+
+
+def _sample_expressions():
+    """One instance of every expression node class, keyed by class."""
+    from fame2pygen_spark.parser import expressions as X
+
+    return {
+        X.Num: X.Num(2.5),
+        X.Str: X.Str("x"),
+        X.NullLit: X.NullLit(),
+        X.DateCol: X.DateCol(),
+        X.Ref: X.Ref("a", -1),
+        X.DateIndexRef: X.DateIndexRef("a", dt.date(2020, 2, 1)),
+        X.DynLookup: X.DynLookup("a", "when"),
+        X.BinOp: X.BinOp("**", X.Ref("a"), X.Num(2, True)),
+        X.UnaryOp: X.UnaryOp("-", X.Ref("a")),
+        X.Compare: X.Compare(">", X.DateCol(), X.Num(100, True)),
+        X.BoolOp: X.BoolOp("or", (X.Ref("a"), X.Ref("b"))),
+        X.Not: X.Not(X.Ref("a")),
+        X.Func: X.Func("sqrt", (X.Ref("a"),)),
+        X.IfExpr: X.IfExpr(X.Ref("a"), X.Num(1, True), X.NullLit()),
+    }
+
+
+def test_every_construct_has_a_lowering(spark):
+    """Every expression node class and every FAME function name lowers
+    to SQL text that Spark analyses; a new construct without a lowering
+    fails here."""
+    from pyspark.sql import functions as F
+
+    from fame2pygen_spark.lowering import LOWERED_FUNCTIONS, Lowering
+    from fame2pygen_spark.parser import expressions as X
+
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from subclasses(sub)
+
+    samples = _sample_expressions()
+    assert set(subclasses(X.Expr)) == set(samples)
+
+    frame_level = {"convert", "chain", "mchain", "fishvol_rebase", "nlrx"}
+    assert X.FUNCTION_NAMES - frame_level <= LOWERED_FUNCTIONS
+    a, b = X.Ref("a"), X.Ref("b")
+    calls = {
+        "pct": (a, X.Num(2, True)), "diff": (X.BinOp("+", a, b),),
+        "lsum": (a, b), "exists": (a,), "firstvalue": (a,),
+        "lastvalue": (X.Ref("a", 1),), "ave": (a,), "sum": (a,),
+        "min": (a,), "max": (a, b), "sqrt": (a,), "abs": (a,), "log": (a,),
+        "exp": (a,), "make": (X.Func("date", (X.Ref("m"),)), X.Str("2020Q1")),
+        "date": (X.Ref("m"),),
+        "dateof": (a, X.Str("*"), X.Ref("contain"), X.Ref("end")),
+    }
+    assert set(calls) == set(LOWERED_FUNCTIONS)
+    nodes = [*samples.values(), *(X.Func(n, args) for n, args in calls.items())]
+
+    df = _lowered_frame(spark)
+    low = Lowering(columns={c.lower(): c for c in df.columns},
+                   scalars={"when": "DATE'2020-02-01'"})
+    for node in nodes:
+        text = low.lower(node)
+        temps = low.take_temps()
+        staged = df.withColumns({n: F.expr(t) for n, t in temps.items()})
+        staged.select(F.expr(text).alias("x")).schema  # analysed by Spark
+    for name in frame_level:
+        with pytest.raises(ValueError, match="frame-level operator"):
+            low.lower(X.Func(name, (a,)))
+
+
+# --------------------------------------- bad scripts fail before Spark work
+
+
+def _no_jobs_started(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_unknown_series_raises_before_spark_work(spark):
+    from fame2pygen_spark import FameScriptError
+
+    df = _lowered_frame(spark)
+
+    def run():
+        with pytest.raises(FameScriptError) as err:
+            run_script(df, ["v = a + 1", "set w = v * bb"])
+        assert err.value.line == "set w = v * bb"
+        assert "'bb'" in str(err.value)
+
+    _no_jobs_started(spark, "fame-unknown-series", run)
+
+
+def test_dependency_cycle_raises_before_spark_work(spark):
+    from fame2pygen_spark import FameScriptError
+
+    df = _lowered_frame(spark)
+
+    def run():
+        with pytest.raises(FameScriptError) as err:
+            run_script(df, ["x = a", "p = q + 1", "q = p * 2", "r = q"])
+        assert err.value.line == "p = q + 1"
+        assert "cycle among p, q" in str(err.value)
+
+    _no_jobs_started(spark, "fame-cycle", run)
+    # a self-reference is not a cycle
+    res = run_script(df, ["a = a * 2", "v = 1", "v = v + a"])
+    assert by_date(res.df, "A", "V")[0] == (2.0, 3.0)
+
+
+# ------------------------------------------------------- py4j round trips
+
+
+def test_execute_py4j_round_trips_per_statement(spark):
+    """Building a level of SQL-text columns costs a few py4j calls per
+    statement; building Columns node by node cost about 75."""
+    from py4j.java_gateway import GatewayClient
+
+    from fame2pygen_spark import FameEngine
+    from fame2pygen_spark.parser.grammar import parse_script
+    from fame2pygen_spark.plans.planner import build_plan
+
+    forms = [
+        "s{i} = a * {i} + b / 2",
+        "s{i} = if a gt {i} then abs(b) else nd",
+        "s{i} = lsum(a, b) - sqrt(abs(b)) * 0.{i}",
+        "set <date 2020-02-01 to 2020-03-31> s{i} = log(a + {i})",
+    ]
+    script = [forms[i % len(forms)].format(i=i + 1) for i in range(40)]
+    plan = build_plan(parse_script(script))
+    assert len(plan.schedule) == 1
+    df = _lowered_frame(spark)
+    df.columns  # noqa: B018 — analyse the input before counting
+
+    calls = [0]
+    orig = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        calls[0] += 1
+        return orig(client, *args, **kwargs)
+
+    # collect earlier tests' garbage first: freeing a py4j proxy sends
+    # a delete command, which would count against this statement budget
+    gc.collect()
+    gc.disable()
+    GatewayClient.send_command = counting
+    try:
+        res = FameEngine().execute(df, plan)
+    finally:
+        GatewayClient.send_command = orig
+        gc.enable()
+    assert calls[0] <= 10 * len(script), calls[0]
+    assert len(res.df.columns) == 4 + 40

@@ -169,7 +169,7 @@ def test_codegen_panel_mode_matches_engine(spark, panel, tmp_path):
 
     script = ["g = pct(v)", "base = firstvalue(v)", "rel = v / base"]
     src = generate_test_script(script, entity_cols=("ENT",))
-    assert 'Window.partitionBy("ENT")' in src
+    assert "PARTITION BY `ENT`" in src
     path = tmp_path / "gen_panel.py"
     path.write_text(src)
     spec = importlib.util.spec_from_file_location("gen_panel", str(path))

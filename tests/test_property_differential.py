@@ -1,9 +1,12 @@
 """Property-based differential testing (SURVEY §5 'ours' plan).
 
-Hypothesis generates random FAME expression trees; the interpreting
-engine (`FameEngine`) and the source-emission backend
-(`generate_test_script`) are two independent lowering paths that must
-produce identical frames — values, nulls, and NaNs alike.
+Hypothesis generates random FAME expression trees.  The engine
+(`FameEngine`) and the source-emission backend (`generate_test_script`)
+share one lowering to Spark SQL, so agreeing with each other is not
+enough: every example is also evaluated by a small pure-Python
+interpreter of the same grammar, built alongside the text by the
+strategies below, which imports nothing from the package.  The three
+must agree on values, nulls and NaNs alike.
 """
 
 from __future__ import annotations
@@ -19,40 +22,115 @@ from hypothesis import strategies as st
 from fame2pygen_spark import run_script
 from fame2pygen_spark.codegen import generate_test_script
 
-# ---------------------------------------------------------- FAME grammar
+# ------------------------------------------------------------ input frame
+
+DATES = [date(2021, i + 1, 1) for i in range(12)]
+COLUMNS = {
+    "a": [3.0, -1.0, None, 7.5, 0.0, 2.0, None, 5.0, 1.0, -4.0, 6.0, 2.5],
+    "b": [float((i * 7) % 5 - 2) for i in range(12)],
+    "c": [None if i % 5 == 4 else float(i) for i in range(12)],
+}
+
+# ------------------------------------------------ pure-Python evaluator
+#
+# A generated example is a pair (FAME text, fn); fn maps the frame's
+# columns (name -> list of row values in DATE order) to the expression's
+# column, with Spark's semantics: null propagates through arithmetic, a
+# null condition takes the else branch, x/0 is null.
+
+
+def _rows(fn):
+    """Lift a function of one row's operand values to whole columns,
+    null in -> null out."""
+    def lifted(*cols):
+        return [None if any(v is None for v in vs) else fn(*vs)
+                for vs in zip(*cols)]
+    return lifted
+
+
+_ARITH = {"+": _rows(lambda x, y: x + y), "-": _rows(lambda x, y: x - y),
+          "*": _rows(lambda x, y: x * y)}
+_CMP = {"gt": lambda x, y: x > y, "lt": lambda x, y: x < y,
+        "ge": lambda x, y: x >= y, "le": lambda x, y: x <= y,
+        "eq": lambda x, y: x == y, "ne": lambda x, y: x != y}
+
+
+def _shift(col, k):
+    """col[t+k]: lead for k > 0, lag for k < 0, null off the ends."""
+    n = len(col)
+    return [col[i + k] if 0 <= i + k < n else None for i in range(n)]
+
+
+def _pct(col):
+    prev = _shift(col, -1)
+    return [None if c is None or p is None or p == 0 else (c - p) / p * 100
+            for c, p in zip(col, prev)]
+
+
+def _first(col):
+    first = next((v for v in col if v is not None), None)
+    return [first] * len(col)
+
+
+def _if(cond, then, other):
+    return [t if c is True else o for c, t, o in zip(cond, then, other)]
+
+
+def _const(v):
+    return lambda env: [v] * len(DATES)
+
 
 REFS = ["a", "b", "c"]
 
 
-def _leaf() -> st.SearchStrategy[str]:
+def _leaf() -> st.SearchStrategy:
     return st.one_of(
-        st.sampled_from(REFS),
-        st.sampled_from([f"{r}[t+1]" for r in REFS]),
-        st.sampled_from([f"{r}[t-1]" for r in REFS]),
-        st.integers(min_value=-20, max_value=20).map(str),
-        st.sampled_from(["nd", "1.5", "0.25"]),
+        st.sampled_from(REFS).map(lambda r: (r, lambda env: env[r])),
+        st.sampled_from(REFS).map(
+            lambda r: (f"{r}[t+1]", lambda env: _shift(env[r], 1))),
+        st.sampled_from(REFS).map(
+            lambda r: (f"{r}[t-1]", lambda env: _shift(env[r], -1))),
+        st.integers(min_value=-20, max_value=20).map(
+            lambda n: (str(n), _const(n))),
+        st.sampled_from([("nd", None), ("1.5", 1.5), ("0.25", 0.25)]).map(
+            lambda p: (p[0], _const(p[1]))),
     )
 
 
-def _expr(depth: int) -> st.SearchStrategy[str]:
+def _expr(depth: int) -> st.SearchStrategy:
     if depth <= 0:
         return _leaf()
     sub = _expr(depth - 1)
+
+    def binop(t):
+        (l, fl), op, (r, fr) = t
+        return f"({l} {op} {r})", lambda env: _ARITH[op](fl(env), fr(env))
+
+    def cond(t):
+        (a, fa), op, (b, fb), (u, fu), (v, fv) = t
+        test = _rows(_CMP[op])
+        # parenthesised: an unbracketed else-branch would swallow a
+        # following ``+ x`` (FAME's if binds as far right as it can)
+        return (f"(if {a} {op} {b} then {u} else {v})",
+                lambda env: _if(test(fa(env), fb(env)), fu(env), fv(env)))
+
     return st.one_of(
         _leaf(),
-        st.tuples(sub, st.sampled_from(["+", "-", "*"]), sub).map(
-            lambda t: f"({t[0]} {t[1]} {t[2]})"
-        ),
-        sub.map(lambda e: f"abs({e})"),
-        sub.map(lambda e: f"sqrt(abs({e}))"),
-        st.tuples(sub, sub).map(lambda t: f"lsum({t[0]}, {t[1]})"),
-        st.sampled_from(REFS).map(lambda r: f"pct({r})"),
-        st.sampled_from(REFS).map(lambda r: f"diff({r})"),
-        st.sampled_from(REFS).map(lambda r: f"firstvalue({r})"),
-        st.tuples(sub, st.sampled_from(["gt", "lt", "ge", "le", "eq", "ne"]),
-                  sub, sub, sub).map(
-            lambda t: f"if {t[0]} {t[1]} {t[2]} then {t[3]} else {t[4]}"
-        ),
+        st.tuples(sub, st.sampled_from(["+", "-", "*"]), sub).map(binop),
+        sub.map(lambda e: (f"abs({e[0]})",
+                           lambda env: _rows(abs)(e[1](env)))),
+        sub.map(lambda e: (f"sqrt(abs({e[0]}))",
+                           lambda env: _rows(lambda x: math.sqrt(abs(x)))(e[1](env)))),
+        st.tuples(sub, sub).map(lambda t: (
+            f"lsum({t[0][0]}, {t[1][0]})",
+            lambda env: [(x or 0) + (y or 0)
+                         for x, y in zip(t[0][1](env), t[1][1](env))])),
+        st.sampled_from(REFS).map(lambda r: (f"pct({r})", lambda env: _pct(env[r]))),
+        st.sampled_from(REFS).map(lambda r: (
+            f"diff({r})", lambda env: _ARITH["-"](env[r], _shift(env[r], -1)))),
+        st.sampled_from(REFS).map(lambda r: (
+            f"firstvalue({r})", lambda env: _first(env[r]))),
+        st.tuples(sub, st.sampled_from(sorted(_CMP)), sub, sub, sub).map(cond),
     )
 
 
@@ -61,17 +139,7 @@ def _expr(depth: int) -> st.SearchStrategy[str]:
 
 @pytest.fixture(scope="module")
 def frame(spark):
-    rows = []
-    vals = [3.0, -1.0, None, 7.5, 0.0, 2.0, None, 5.0, 1.0, -4.0, 6.0, 2.5]
-    for i in range(12):
-        rows.append(
-            (
-                date(2021, i + 1, 1),
-                vals[i],
-                float((i * 7) % 5 - 2),
-                None if i % 5 == 4 else float(i),
-            )
-        )
+    rows = [(d, *(COLUMNS[c][i] for c in REFS)) for i, d in enumerate(DATES)]
     return spark.createDataFrame(rows, "DATE date, A double, B double, C double")
 
 
@@ -87,11 +155,21 @@ def _load(src: str, tmp_path, name: str):
 def _same(x, y) -> bool:
     if x is None or y is None:
         return x is None and y is None
-    if isinstance(x, float) and isinstance(y, float):
+    if isinstance(x, float) or isinstance(y, float):
         if math.isnan(x) or math.isnan(y):
             return math.isnan(x) and math.isnan(y)
         return x == pytest.approx(y, rel=1e-12, abs=1e-12)
     return x == y
+
+
+def test_evaluator_semantics():
+    """The evaluator itself, on hand-checked cases."""
+    env = dict(COLUMNS)
+    assert _pct([2.0, 3.0, None, 4.0, 0.0, 1.0]) == [None, 50.0, None, None, -100.0, None]
+    assert _first(env["a"]) == [3.0] * 12
+    assert _shift([1, 2, 3], 1) == [2, 3, None]
+    test = _rows(_CMP["gt"])(env["a"], env["b"])
+    assert _if(test, [1] * 12, [0] * 12)[2] == 0  # null condition → else
 
 
 _counter = [0]
@@ -105,7 +183,11 @@ _counter = [0]
 )
 @given(e1=_expr(2), e2=_expr(1))
 def test_engine_and_codegen_agree(spark, frame, tmp_path, e1, e2):
-    script = [f"v1 = {e1}", f"v2 = {e2} + v1"]
+    (t1, f1), (t2, f2) = e1, e2
+    script = [f"v1 = {t1}", f"v2 = {t2} + v1"]
+    env = dict(COLUMNS)
+    want_v1 = f1(env)
+    want_v2 = _ARITH["+"](f2(env), want_v1)
     engine_rows = (
         run_script(frame, script).df.orderBy("DATE").select("V1", "V2").collect()
     )
@@ -114,7 +196,10 @@ def test_engine_and_codegen_agree(spark, frame, tmp_path, e1, e2):
     gen_rows = (
         mod.ts_transformer(frame).orderBy("DATE").select("V1", "V2").collect()
     )
-    for r_e, r_g in zip(engine_rows, gen_rows):
+    assert len(engine_rows) == len(gen_rows) == len(DATES)
+    for r_e, r_g, w1, w2 in zip(engine_rows, gen_rows, want_v1, want_v2):
+        assert _same(r_e["V1"], w1), (script, r_e, w1)
+        assert _same(r_e["V2"], w2), (script, r_e, w2)
         assert _same(r_e["V1"], r_g["V1"]), (script, r_e, r_g)
         assert _same(r_e["V2"], r_g["V2"]), (script, r_e, r_g)
 
