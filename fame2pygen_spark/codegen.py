@@ -19,6 +19,13 @@ in ``engine.py`` interprets the same plan directly and is the primary
 path.  This backend exists for the same workflow the reference serves:
 auditable, version-controllable generated code.
 
+It has no walk of its own.  ``generate_test_script`` runs the engine's
+plan walk (``FameEngine.walk``) against ``_PrintFrame``, which prints
+each step as a line of ``ts_transformer`` where the engine's live frame
+applies it to a DataFrame.  Scalars and the inferred convert frequency
+become variables of the generated module; scalars are spliced into the
+SQL text when it runs.
+
 Differences from the reference's generated-code shape (deliberate):
 
 * expressions are printed as the Spark SQL text of the engine's own
@@ -42,22 +49,23 @@ from __future__ import annotations
 
 from datetime import date as _date
 
+from .engine import DEFAULT_BACKCAST_WINDOW, FameEngine
 from .lowering import Lowering, ident
 from .parser import expressions as X
-from .parser.expressions import quoted
 from .parser.grammar import (
-    ChainStmt, ConvertStmt, FishvolStmt, NlrxStmt, PointInTimeStmt,
-    ScalarAssignStmt, SeriesAssignStmt, column_name, parse_script,
+    ChainStmt, FishvolStmt, parse_script,
     parse_statement,  # noqa: F401  (re-export: parse_fame_formula parity)
 )
-from .plans.planner import Plan, build_plan, scalar_names
+from .plans.planner import build_plan
 
 #: delimits a Python expression spliced into SQL text at run time
 _HOLE = "\x00"
 
-
-def _date_repr(d: _date) -> str:
-    return f"date({d.year}, {d.month}, {d.day})"
+#: imports a printed call argument needs, by a marker in its source
+_ARG_IMPORTS = {
+    "ConvertMeta(": "from fame2pygen_spark.parser.grammar import ConvertMeta",
+    "datetime.": "import datetime",
+}
 
 
 def _scalar_var(name: str) -> str:
@@ -88,30 +96,90 @@ class _SourceLowering(Lowering):
         return _hole(f"{ident(col)!r} if {col!r} in df.columns else 'NULL'")
 
 
-class _Lines:
-    def __init__(self):
-        self.out: list[str] = []
+class _Var(str):
+    """A variable of the generated module; prints as its name."""
 
-    def add(self, line: str = "", indent: int = 1):
-        self.out.append("    " * indent + line if line else "")
-
-
-def _print_with_columns(lines: _Lines, out: str, batch: dict[str, str]) -> None:
-    lines.add(f"{out} = df.withColumns({{")
-    for name, text in batch.items():
-        lines.add(f"    {name!r}: F.expr({_py(text)}),")
-    lines.add("})")
+    def __repr__(self) -> str:
+        return str(self)
 
 
-def _with_columns(lines: _Lines, low: Lowering,
-                  updates: dict[str, str]) -> None:
-    """Print the engine's ``_apply``: staged temporaries, then *updates*."""
-    temps = low.take_temps()
-    if temps:
-        _print_with_columns(lines, "df", temps)
-    _print_with_columns(lines, "df", updates)
-    if temps:
-        lines.add(f"df = df.drop({', '.join(map(repr, temps))})")
+class _PrintFrame:
+    """The engine's walk frame for generated code: each step is printed
+    as a line of ``ts_transformer`` instead of applied to a DataFrame;
+    probes and operator calls return the module variable they assign."""
+
+    #: the input's columns are known only when the generated module runs
+    columns = None
+
+    def __init__(self, date_col: str):
+        self.date_col = date_col
+        self.df = _Var("df")
+        self.imports: set[str] = set()
+        self.lines: list[str] = []
+
+    def _add(self, line: str) -> None:
+        self.lines.append("    " + line)
+
+    def _with_columns(self, out: str, updates: dict[str, str]) -> None:
+        self._add(f"{out} = df.withColumns({{")
+        for name, text in updates.items():
+            self._add(f"    {name!r}: F.expr({_py(text)}),")
+        self._add("})")
+
+    def with_columns(self, updates: dict[str, str]) -> None:
+        self._with_columns("df", updates)
+
+    def drop(self, names) -> None:
+        # DataFrame.drop ignores names the frame does not have
+        self._add(f"df = df.drop({', '.join(map(repr, names))})")
+
+    def call(self, fn, *args, out: str, **kwargs) -> _Var:
+        text = ", ".join([*map(repr, args),
+                          *(f"{k}={v!r}" for k, v in kwargs.items())])
+        self.imports.add(f"from {fn.__module__} import {fn.__name__}")
+        self.imports.update(imp for marker, imp in _ARG_IMPORTS.items()
+                            if marker in text)
+        self._add(f"{out} = {fn.__name__}({text})")
+        return _Var(out)
+
+    def apply(self, fn, *args, **kwargs) -> None:
+        self.call(fn, self.df, *args, out="df", **kwargs)
+
+    def pin(self) -> _Var:
+        self._add("_base = df")
+        return _Var("_base")
+
+    def join(self, other: _Var, on: list[str], added: list[str]) -> None:
+        self._add(f'df = df.join({other}, on={on!r}, how="full")')
+
+    def first(self, text: str, *, out: str, temps=None,
+              where: str | None = None) -> _Var:
+        probe = "df"
+        if temps:
+            self._with_columns("_probe", temps)
+            probe = "_probe"
+        probe += (f".where({_py(where)})" if where
+                  else f".orderBy({self.date_col!r})")
+        var = _scalar_var(out)
+        self._add(f'_row = {probe}.select(F.expr({_py(text)}).alias("v")).first()')
+        self._add(f'{var} = _row["v"] if _row else None')
+        return _Var(var)
+
+    def literal(self, value: _Var) -> str:
+        self.imports.add("from fame2pygen_spark.lowering import sql_literal")
+        return _hole(f"sql_literal({value})")
+
+
+_HEADER = '''"""Generated by fame2pygen_spark.codegen — do not edit.
+
+Replays a FAME script as one PySpark DataFrame chain: each dependency
+level is one withColumns of Spark SQL expressions; frame-level
+operators call into fame2pygen_spark (as the reference's generated
+code calls into polars_econ).
+"""
+
+from pyspark.sql import DataFrame, functions as F
+'''
 
 
 # ------------------------------------------------------------ public API
@@ -122,184 +190,20 @@ def generate_test_script(
     *,
     date_col: str = "DATE",
     entity_cols: tuple[str, ...] = (),
-    backcast_window: tuple[_date, _date] = (_date(2016, 12, 31),
-                                            _date(1981, 3, 31)),
+    backcast_window: tuple[_date, _date] = DEFAULT_BACKCAST_WINDOW,
 ) -> str:
     """FAME commands → source of a module defining
-    ``ts_transformer(df: DataFrame) -> DataFrame``."""
+    ``ts_transformer(df: DataFrame) -> DataFrame``: the engine's walk of
+    the script's plan, printed."""
     plan = build_plan(parse_script(cmds))
-    scalars = scalar_names(plan)
-    low = _SourceLowering(
-        date_col, tuple(entity_cols), renames=plan.convert_renames,
-        scalars={n: _hole(f"sql_literal({_scalar_var(n)})") for n in scalars},
-    )
-    lines = _Lines()
-
-    ents = ", ".join(f'"{e}"' for e in entity_cols)
-    lit_import = (
-        "from fame2pygen_spark.lowering import sql_literal\n" if scalars else ""
-    )
-    header = f'''"""Generated by fame2pygen_spark.codegen — do not edit.
-
-Replays the FAME script below as one PySpark DataFrame chain: each
-dependency level is one withColumns of Spark SQL expressions; frame-
-level operators call into fame2pygen_spark (as the reference's
-generated code calls into polars_econ).
-"""
-
-from datetime import date
-
-from pyspark.sql import DataFrame, functions as F
-{lit_import}
-
-def ts_transformer(df: DataFrame) -> DataFrame:
-'''
-
-    # 1. backcasts
-    if plan.backcasts:
-        pairs = [
-            (column_name(pa.shift_pct.target), column_name(pa.shift_pct.ser2))
-            for pa in plan.backcasts
-        ]
-        seeds = {
-            column_name(pa.shift_pct.target): column_name(pa.shift_pct.ser1)
-            for pa in plan.backcasts
-            if column_name(pa.shift_pct.target) != column_name(pa.shift_pct.ser1)
-        }
-        lines.add("from fame2pygen_spark.functions.econ import backcast")
-        for tgt, src in seeds.items():
-            lines.add(f'df = df.withColumn("{tgt}", F.col("{src}"))')
-        start, end = backcast_window
-        lines.add(
-            f"df = backcast(df, {pairs!r}, {_date_repr(start)}, "
-            f'{_date_repr(end)}, date_col="{date_col}", '
-            f"entity_cols=({ents}))"
-        )
-
-    # 2. convert bridge
-    if plan.convert_groups:
-        lines.add("from fame2pygen_spark.operators.convert import convert_series")
-        lines.add("from fame2pygen_spark.parser.grammar import ConvertMeta")
-        lines.add("_base = df  # all converts read the pre-bridge frame")
-        join_on = (
-            "[" + ", ".join(f'"{e}"' for e in entity_cols)
-            + (", " if entity_cols else "") + f'"{date_col}"]'
-        )
-        for key in sorted(plan.convert_groups):
-            for pa in plan.convert_groups[key]:
-                stmt: ConvertStmt = pa.stmt  # type: ignore[assignment]
-                meta = stmt.meta
-                freq = pa.freq or "m"
-                lines.add(f"conv = convert_series(_base, {meta!r},")
-                lines.add(f'    date_col="{date_col}", source_freq="{freq}",')
-                lines.add(f"    entity_cols=({ents}))")
-                lines.add(f'if "{meta.out_column}" in df.columns:')
-                lines.add(f'    df = df.drop("{meta.out_column}")')
-                lines.add(f'df = df.join(conv, on={join_on}, how="full")')
-
-    # 3. levels
-    for stage in plan.schedule:
-        batch: dict[str, str] = {}
-
-        def flush():
-            if batch:
-                _with_columns(lines, low, dict(batch))
-                batch.clear()
-
-        for pa in stage:
-            stmt = pa.stmt
-            if isinstance(stmt, SeriesAssignStmt):
-                if pa.column in batch:
-                    flush()  # same target reassigned → sequential
-                text = low.lower(stmt.expr, stmt.line)
-                if pa.date_filter is not None:
-                    text = low.scoped(text, pa.date_filter, pa.column)
-                batch[pa.column] = text
-                continue
-            flush()
-            if isinstance(stmt, ScalarAssignStmt):
-                _emit_scalar(stmt, plan, low, lines)
-            elif isinstance(stmt, ChainStmt):
-                lines.add("from fame2pygen_spark.functions.econ import chain_index")
-                out = column_name(stmt.target)
-                lines.add(
-                    f"df = chain_index(df, {stmt.terms!r}, {stmt.base_year}, "
-                    f'"{out}", date_col="{date_col}", entity_cols=({ents}))'
-                )
-                lines.add('df = df.drop("__y")')
-            elif isinstance(stmt, FishvolStmt):
-                lines.add("from fame2pygen_spark.functions.econ import fisher_volume")
-                out = column_name(stmt.target)
-                pairs = _expand_fishvol_pairs(stmt, plan)
-                lines.add(
-                    f"df = fisher_volume(df, {pairs!r}, {stmt.base_year}, "
-                    f'"{out}", date_col="{date_col}", entity_cols=({ents}))'
-                )
-            elif isinstance(stmt, NlrxStmt):
-                lines.add("from fame2pygen_spark.functions.nlrx import nlrx")
-                out = column_name(stmt.target)
-                series = [column_name(s) for s in stmt.series]
-                try:
-                    lamb = str(float(stmt.lamb))
-                except ValueError:
-                    lamb = f"float({_scalar_var(stmt.lamb)})"
-                lines.add(
-                    f'df = nlrx(df, {lamb}, "{series[0]}", '
-                    f"{tuple(series[1:])!r}, \"{out}\", "
-                    f'date_col="{date_col}", entity_cols=({ents}))'
-                )
-        flush()
-
-    # 4. point-in-time upserts
-    for target_col in sorted(plan.pit_by_target):
-        for pa in plan.pit_by_target[target_col]:
-            stmt: PointInTimeStmt = pa.stmt  # type: ignore[assignment]
-            text = low.lower(stmt.expr, stmt.line)
-            update = low.at_date(stmt.date, text, target_col)
-            _with_columns(lines, low, {target_col: update})
-
-    lines.add("return df")
-    body = "\n".join(lines.out) if lines.out else "    return df"
-    return header + body + "\n"
-
-
-def _expand_fishvol_pairs(stmt: FishvolStmt, plan: Plan):
-    expanded: list[tuple[str, str]] = []
-    for vol, price in stmt.pairs:
-        vols = plan.list_aliases.get(vol.lower(), (vol,))
-        prices = plan.list_aliases.get(price.lower(), (price,))
-        if len(vols) == len(prices) > 1:
-            expanded.extend(zip(vols, prices))
-        else:
-            expanded.append((vol, price))
-    return tuple(expanded)
-
-
-def _emit_scalar(stmt: ScalarAssignStmt, plan: Plan, low: Lowering,
-                 lines: _Lines) -> None:
-    var = _scalar_var(stmt.target)
-    date_col = low.date_col
-    if isinstance(stmt.expr, X.DynLookup):
-        col = column_name(stmt.expr.name)
-        col = plan.convert_renames.get(col, col)
-        lookup_var = _scalar_var(stmt.expr.var)
-        lines.add(
-            f'_row = df.where(F.col("{date_col}") == F.lit({lookup_var}))'
-            f'.select(F.col("{quoted(col)}").alias("v")).first()'
-        )
-        lines.add(f'{var} = _row["v"] if _row else None')
-        return
-    text = low.lower(stmt.expr, stmt.line)
-    temps = low.take_temps()
-    if temps:
-        _print_with_columns(lines, "_probe", temps)
-    else:
-        lines.add("_probe = df")
-    lines.add(
-        f'_row = _probe.orderBy("{date_col}")'
-        f'.select(F.expr({_py(text)}).alias("v")).first()'
-    )
-    lines.add(f'{var} = _row["v"] if _row else None')
+    frame = _PrintFrame(date_col)
+    low = _SourceLowering(date_col, tuple(entity_cols),
+                          renames=plan.convert_renames)
+    FameEngine(date_col, entity_cols, backcast_window).walk(frame, plan, low)
+    imports = "".join(f"{line}\n" for line in sorted(frame.imports))
+    body = "\n".join([*frame.lines, "    return df"])
+    return (f"{_HEADER}{imports}\n\n"
+            f"def ts_transformer(df: DataFrame) -> DataFrame:\n{body}\n")
 
 
 # -------------------------------------------------- helper-library emission

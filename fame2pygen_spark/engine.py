@@ -9,6 +9,19 @@ column pruning push into the parquet scan, and the only shuffles are
 the ones the semantics require (ordered windows, convert groupBys,
 index-number year aggregates).
 
+One walk, two frames
+--------------------
+``FameEngine.walk`` is the package's only walk of a ``Plan``: it
+decides step order, same-target batch flushes, convert frequencies and
+grouping, fishvol list-alias expansion, date-window scoping of
+operator output, scalar probes, nlrx lambdas and point-in-time
+upserts.  It drives a *frame* through a few primitives (``withColumns``
+of SQL text, drop-if-present, calls into the frame-level operators, a
+full join on keys, a scalar probe).  ``execute`` walks ``_LiveFrame``,
+which applies each step to the DataFrame; ``codegen`` walks a frame
+that prints each step as a line of the generated module, so the module
+replays exactly what the engine runs.
+
 Execution order (mirrors the reference, ``fame2py_converter.py:303-766``):
 
 1. batched SHIFT_PCT backcasts (``:319-328``)
@@ -21,12 +34,12 @@ Execution order (mirrors the reference, ``fame2py_converter.py:303-766``):
    temporaries; scalars are eager ``.first()`` probes inlined as typed
    literals into later levels
 4. point-in-time upserts, grouped per target (``:700-745``)
-5. local-database extraction (``:747-761``)
+5. local-database extraction (``:747-761``, ``execute`` only)
 
 The frame's columns are tracked in Python: ``df.columns`` is read once
-at the start and once after each frame-level operator (backcast,
-convert bridge, chain, fishvol, nlrx), never per level.  A reference to
-a series the frame does not have raises ``FameScriptError`` naming the
+at the start and once after each call into a frame-level operator
+(backcast, chain, fishvol, nlrx), never per level.  A reference to a
+series the frame does not have raises ``FameScriptError`` naming the
 FAME line, before Spark analyses anything.
 
 Documented divergences from the reference (each is deliberate):
@@ -56,8 +69,8 @@ from pyspark.sql import DataFrame, functions as F
 from .lowering import Lowering, ident, sql_literal
 from .parser.expressions import DynLookup, quoted
 from .parser.grammar import (
-    ChainStmt, ConvertStmt, FameScriptError, FishvolStmt, NlrxStmt,
-    PointInTimeStmt, ScalarAssignStmt, SeriesAssignStmt, column_name,
+    FREQ_INFO, ChainStmt, FameScriptError, FishvolStmt, NlrxStmt,
+    ScalarAssignStmt, SeriesAssignStmt, column_name, normalize_frequency,
     parse_script,
 )
 from .plans.planner import Plan, PlannedAssign, build_plan
@@ -73,6 +86,74 @@ class FameResult:
     scalars: dict[str, object] = field(default_factory=dict)
     local_databases: dict[str, DataFrame] = field(default_factory=dict)
     renames: dict[str, str] = field(default_factory=dict)
+
+
+class _LiveFrame:
+    """The walk's frame in ``execute``: each step applied to ``df``.
+
+    ``columns`` maps the frame's lower-cased column names to the names;
+    the walk's ``Lowering`` shares the dict, so it is updated in place.
+    """
+
+    def __init__(self, df: DataFrame, date_col: str):
+        self.df, self.date_col = df, date_col
+        self.columns: dict[str, str] = {}
+        self._read_schema()
+
+    def _read_schema(self) -> None:
+        self.columns.clear()
+        self.columns.update((c.lower(), c) for c in self.df.columns)
+
+    def with_columns(self, updates: dict[str, str]) -> None:
+        self.df = self.df.withColumns({c: F.expr(t) for c, t in updates.items()})
+        self.columns.update((c.lower(), c) for c in updates)
+
+    def drop(self, names) -> None:
+        present = [c for c in names if self.columns.get(c.lower()) == c]
+        if present:
+            self.df = self.df.drop(*present)
+            for c in present:
+                del self.columns[c.lower()]
+
+    def call(self, fn, *args, out: str, **kwargs):
+        """``fn(*args, **kwargs)``; *out* names the result where the walk
+        is printed instead."""
+        return fn(*args, **kwargs)
+
+    def apply(self, fn, *args, **kwargs) -> None:
+        """``df = fn(df, *args, **kwargs)`` for a frame-level operator."""
+        self.df = fn(self.df, *args, **kwargs)
+        self._read_schema()
+
+    def pin(self) -> DataFrame:
+        return self.df
+
+    def join(self, other: DataFrame, on: list[str], added: list[str]) -> None:
+        self.df = self.df.join(other, on=on, how="full")
+        self.columns.update((c.lower(), c) for c in added)
+
+    def first(self, text: str, *, out: str, temps=None, where: str | None = None):
+        """The value of *text* on the first row by date, or on the rows
+        *where* holds."""
+        probe = (self.df.withColumns({n: F.expr(t) for n, t in temps.items()})
+                 if temps else self.df)
+        probe = probe.where(where) if where else probe.orderBy(self.date_col)
+        row = probe.select(F.expr(text).alias("v")).first()
+        return row["v"] if row else None
+
+    def literal(self, value) -> str:
+        return sql_literal(value)
+
+
+def _apply(frame, low: Lowering, updates: dict[str, str]) -> None:
+    """One ``withColumns`` for the staged temporaries, then one for
+    *updates* (column -> SQL text); the temporaries are dropped."""
+    temps = low.take_temps()
+    if temps:
+        frame.with_columns(temps)
+    frame.with_columns(updates)
+    if temps:
+        frame.drop(temps)
 
 
 class FameEngine:
@@ -95,8 +176,6 @@ class FameEngine:
         return self.execute(df, plan)
 
     def execute(self, df: DataFrame, plan: Plan) -> FameResult:
-        scalars: dict[str, object] = {}
-
         # Multi-consumer scripts read the input frame through several
         # independent subplans: every convert derives its aggregation
         # from the pre-bridge frame AND joins back onto it, and
@@ -130,88 +209,70 @@ class FameEngine:
         ):
             df = df.localCheckpoint(eager=True)
 
+        frame = _LiveFrame(df, self.date_col)
         low = Lowering(self.date_col, self.entity_cols,
-                       renames=plan.convert_renames, columns=_schema(df))
+                       renames=plan.convert_renames, columns=frame.columns)
+        scalars = self.walk(frame, plan, low)
+        local_dbs = self._extract_local_dbs(frame.df, plan, low)
+        return FameResult(frame.df, scalars, local_dbs,
+                          dict(plan.convert_renames))
+
+    def walk(self, frame, plan: Plan, low: Lowering) -> dict[str, object]:
+        """Run *plan* step by step against *frame*, lowering with *low*;
+        returns the scalars, lower-case name -> whatever the frame's
+        probe gave."""
+        scalars: dict[str, object] = {}
         if plan.backcasts:
-            df = self._run_backcasts(df, plan)
-            low.columns = _schema(df)
+            self._run_backcasts(frame, plan)
         if plan.convert_groups:
-            df = self._run_convert_bridge(df, plan, low)
-            low.columns = _schema(df)
-
+            self._run_convert_bridge(frame, plan)
         for stage in plan.schedule:
-            df = self._run_stage(df, stage, plan, scalars, low)
-
-        df = self._run_point_in_time(df, plan, low)
-        local_dbs = self._extract_local_dbs(df, plan, low)
-        return FameResult(df, scalars, local_dbs, dict(plan.convert_renames))
-
-    # ------------------------------------------------------- infrastructure
-
-    @staticmethod
-    def _apply(df: DataFrame, low: Lowering, updates: dict[str, str]) -> DataFrame:
-        """One ``withColumns`` for the staged temporaries, then one for
-        *updates* (column -> SQL text); the temporaries are dropped."""
-        temps = low.take_temps()
-        if temps:
-            df = df.withColumns({n: F.expr(t) for n, t in temps.items()})
-        df = df.withColumns({c: F.expr(t) for c, t in updates.items()})
-        if temps:
-            df = df.drop(*temps)
-        low.track(updates)
-        return df
+            self._run_stage(frame, stage, plan, scalars, low)
+        self._run_point_in_time(frame, plan, low)
+        return scalars
 
     # ------------------------------------------------------------- stages
 
-    def _run_backcasts(self, df: DataFrame, plan: Plan) -> DataFrame:
+    def _operator_options(self) -> dict:
+        return {"date_col": self.date_col, "entity_cols": self.entity_cols}
+
+    def _run_backcasts(self, frame, plan: Plan) -> None:
         from .functions.econ import backcast
 
-        pairs = [
-            (column_name(pa.shift_pct.ser1), column_name(pa.shift_pct.ser2))
-            for pa in plan.backcasts
-        ]
-        # target column := rewritten ser1 (reference pairs target/pct by
-        # column, fame2py_converter.py:321)
-        tgt_pairs = [
-            (column_name(pa.shift_pct.target), column_name(pa.shift_pct.ser2))
-            for pa in plan.backcasts
-        ]
+        shifts = [pa.shift_pct for pa in plan.backcasts]
         # when target != ser1, seed the target column from ser1 first
         seeds = {
-            column_name(pa.shift_pct.target): F.col(column_name(pa.shift_pct.ser1))
-            for pa in plan.backcasts
-            if column_name(pa.shift_pct.target) != column_name(pa.shift_pct.ser1)
+            column_name(s.target): ident(column_name(s.ser1))
+            for s in shifts
+            if column_name(s.target) != column_name(s.ser1)
         }
         if seeds:
-            df = df.withColumns(seeds)
+            frame.with_columns(seeds)
+        # target column := rewritten ser1 (reference pairs target/pct by
+        # column, fame2py_converter.py:321)
+        pairs = [(column_name(s.target), column_name(s.ser2)) for s in shifts]
         start, end = self.backcast_window
-        return backcast(
-            df, tgt_pairs, start, end,
-            date_col=self.date_col, entity_cols=self.entity_cols,
-        )
+        frame.apply(backcast, pairs, start, end, **self._operator_options())
 
-    def _run_convert_bridge(
-        self, df: DataFrame, plan: Plan, low: Lowering
-    ) -> DataFrame:
-        from .operators.convert import convert_series, infer_frequency
+    def _run_convert_bridge(self, frame, plan: Plan) -> None:
+        from .operators.convert import (
+            convert_series, convert_series_multi, infer_frequency,
+        )
 
         # All converts read from the pre-bridge frame (their sources are
         # input columns — the bridge runs before any level assignment).
         # Deriving each convert from the evolving joined frame would put
         # the whole join chain inside every convert subplan: plan size
         # 2^n_converts, a driver OOM on convert-heavy scripts.
-        base_df = df
-        inferred: str | None = None
+        base = frame.pin()
+        inferred = None
 
-        def resolve_freq(pa, meta) -> str:
+        def resolve_freq(pa, meta):
             nonlocal inferred
             if meta.as_freq and meta.as_freq != "*":
                 # reference normalizers pass unknown values through
                 # without raising (formulas_generator.py:118-151) —
                 # treat an unrecognized as_freq hint as absent
-                from .operators.convert import FREQ_INFO
-                from .parser.grammar import normalize_frequency
-
                 cand, _ = normalize_frequency(meta.as_freq)
                 if cand in FREQ_INFO:
                     return cand
@@ -220,225 +281,162 @@ class FameEngine:
             if self.default_freq:
                 return self.default_freq
             if inferred is None:
-                inferred = infer_frequency(
-                    base_df, self.date_col, tuple(self.entity_cols)
+                inferred = frame.call(
+                    infer_frequency, base, self.date_col, self.entity_cols,
+                    out="_freq",
                 )
             return inferred
 
-        from .operators.convert import convert_series_multi
-
-        join_keys = [*self.entity_cols, self.date_col]
+        on = [*self.entity_cols, self.date_col]
         for key in sorted(plan.convert_groups):
             # subgroup by resolved source frequency; each subgroup runs
             # as ONE aggregation/calendar pass + ONE join (the
             # reference's bridge batching, done at the plan level)
             by_freq: dict[str, list] = {}
             for pa in plan.convert_groups[key]:
-                stmt: ConvertStmt = pa.stmt  # type: ignore[assignment]
-                by_freq.setdefault(
-                    resolve_freq(pa, stmt.meta), []
-                ).append(stmt.meta)
+                meta = pa.stmt.meta
+                by_freq.setdefault(resolve_freq(pa, meta), []).append(meta)
             for source_freq in sorted(by_freq):
                 metas = by_freq[source_freq]
-                groupable = len(metas) > 1 and all(
+                if len(metas) > 1 and all(
                     (m.technique or "constant") != "cubic" for m in metas
-                )
-                if groupable:
-                    conv = convert_series_multi(
-                        base_df, metas,
-                        date_col=self.date_col,
-                        source_freq=source_freq,
-                        entity_cols=self.entity_cols,
+                ):
+                    calls = [(convert_series_multi, metas, metas)]
+                else:
+                    calls = [(convert_series, m, [m]) for m in metas]
+                for fn, arg, group in calls:
+                    conv = frame.call(
+                        fn, base, arg, source_freq=source_freq, out="conv",
+                        **self._operator_options(),
                     )
-                    drops = [m.out_column for m in metas
-                             if low.has(m.out_column)]
-                    if drops:
-                        df = df.drop(*drops)
-                    df = df.join(conv, on=join_keys, how="full")
-                    low.track(m.out_column for m in metas)
-                    continue
-                for meta in metas:
-                    conv = convert_series(
-                        base_df, meta,
-                        date_col=self.date_col,
-                        source_freq=source_freq,
-                        entity_cols=self.entity_cols,
-                    )
-                    if low.has(meta.out_column):
-                        df = df.drop(meta.out_column)
-                    df = df.join(conv, on=join_keys, how="full")
-                    low.track([meta.out_column])
-        return df
+                    added = [m.out_column for m in group]
+                    frame.drop(added)
+                    frame.join(conv, on, added)
 
     def _run_stage(
         self,
-        df: DataFrame,
+        frame,
         stage: list[PlannedAssign],
         plan: Plan,
         scalars: dict[str, object],
         low: Lowering,
-    ) -> DataFrame:
-        batch: list[PlannedAssign] = []
-
-        def flush(frame: DataFrame) -> DataFrame:
-            nonlocal batch
-            if batch:
-                frame = self._apply_batch(frame, batch, low)
-                batch = []
-            return frame
-
+    ) -> None:
+        batch: dict[str, str] = {}
         for pa in stage:
             stmt = pa.stmt
             if isinstance(stmt, SeriesAssignStmt):
-                if any(b.column == pa.column for b in batch):
-                    df = flush(df)  # same target reassigned → sequential
-                batch.append(pa)
+                if pa.column in batch:  # same target reassigned → sequential
+                    _apply(frame, low, batch)
+                    batch = {}
+                text = low.lower(stmt.expr, stmt.line)
+                if pa.date_filter is not None:
+                    text = low.scoped(text, pa.date_filter, pa.column)
+                batch[pa.column] = text
                 continue
 
-            df = flush(df)
+            if batch:
+                _apply(frame, low, batch)
+                batch = {}
             if isinstance(stmt, ScalarAssignStmt):
                 key = stmt.target.lower()
-                scalars[key] = self._eval_scalar(df, stmt, scalars, low)
-                low.scalars[key] = sql_literal(scalars[key])
-                continue
-            if isinstance(stmt, ChainStmt):
-                df = self._run_chain(df, pa, low)
+                scalars[key] = self._eval_scalar(frame, stmt, low)
+                low.scalars[key] = frame.literal(scalars[key])
+            elif isinstance(stmt, ChainStmt):
+                self._run_chain(frame, pa, low)
             elif isinstance(stmt, FishvolStmt):
-                df = self._run_fishvol(df, pa, plan, low)
+                self._run_fishvol(frame, pa, plan, low)
             elif isinstance(stmt, NlrxStmt):
-                df = self._run_nlrx(df, pa, scalars)
+                self._run_nlrx(frame, pa, scalars, low)
             else:  # pragma: no cover
                 raise ValueError(f"unexpected statement in stage: {stmt}")
-            low.columns = _schema(df)
-        return flush(df)
+        if batch:
+            _apply(frame, low, batch)
 
-    def _apply_batch(
-        self, df: DataFrame, batch: list[PlannedAssign], low: Lowering
-    ) -> DataFrame:
-        updates: dict[str, str] = {}
-        for pa in batch:
-            stmt: SeriesAssignStmt = pa.stmt  # type: ignore[assignment]
-            text = low.lower(stmt.expr, stmt.line)
-            if pa.date_filter is not None:
-                text = low.scoped(text, pa.date_filter, pa.column)
-            updates[pa.column] = text
-        return self._apply(df, low, updates)
-
-    def _eval_scalar(
-        self,
-        df: DataFrame,
-        stmt: ScalarAssignStmt,
-        scalars: dict[str, object],
-        low: Lowering,
-    ) -> object:
+    def _eval_scalar(self, frame, stmt: ScalarAssignStmt, low: Lowering):
         # dynamic lookup: x = ser[scalar_var] → value at that date
         # (reference ``fame2py_converter.py:497-503``)
         if isinstance(stmt.expr, DynLookup):
-            var = stmt.expr.var.lower()
-            if var not in scalars:
+            when = low.scalars.get(stmt.expr.var.lower())
+            if when is None:
                 raise FameScriptError(
                     f"scalar {stmt.expr.var!r} not defined", stmt.line
                 )
-            row = (
-                df.where(F.col(self.date_col) == F.lit(scalars[var]))
-                .select(F.col(quoted(column_name(stmt.expr.name))).alias("v"))
-                .first()
+            low.line = stmt.line
+            return frame.first(
+                low.column(stmt.expr.name), out=stmt.target,
+                where=f"{ident(self.date_col)} = {when}",
             )
-            return row["v"] if row else None
-
         text = low.lower(stmt.expr, stmt.line)
-        temps = low.take_temps()
-        probe = (
-            df.withColumns({n: F.expr(t) for n, t in temps.items()})
-            if temps else df
-        )
-        row = (
-            probe.orderBy(self.date_col)
-            .select(F.expr(text).alias("v"))
-            .first()
-        )
-        return row["v"] if row else None
+        return frame.first(text, out=stmt.target, temps=low.take_temps())
 
-    def _scoped_output(self, pa, out: str, tmp: str, low: Lowering):
-        """The frame-level operator's output column *tmp*, scoped to the
-        statement's date window."""
-        if pa.date_filter is None:
-            return F.col(tmp)
-        return F.expr(low.scoped(ident(tmp), pa.date_filter, out))
+    def _put_output(self, frame, pa: PlannedAssign, low: Lowering,
+                    tmp: str, *leftovers: str) -> None:
+        """Move a frame-level operator's output column *tmp* into the
+        statement's target, scoped to its date window."""
+        text = ident(tmp)
+        if pa.date_filter is not None:
+            text = low.scoped(text, pa.date_filter, pa.column)
+        frame.with_columns({pa.column: text})
+        frame.drop([tmp, *leftovers])
 
-    def _run_chain(self, df, pa, low: Lowering) -> DataFrame:
+    def _run_chain(self, frame, pa: PlannedAssign, low: Lowering) -> None:
         from .functions.econ import chain_index
 
-        stmt: ChainStmt = pa.stmt
-        out = column_name(stmt.target)
-        result = chain_index(
-            df, stmt.terms, stmt.base_year, "__chain_out",
-            date_col=self.date_col, entity_cols=self.entity_cols,
-        )
-        col = self._scoped_output(pa, out, "__chain_out", low)
-        return result.withColumn(out, col).drop("__chain_out", "__y")
+        stmt: ChainStmt = pa.stmt  # type: ignore[assignment]
+        frame.apply(chain_index, stmt.terms, stmt.base_year, "__chain_out",
+                    **self._operator_options())
+        self._put_output(frame, pa, low, "__chain_out", "__y")
 
-    def _run_fishvol(self, df, pa, plan, low: Lowering) -> DataFrame:
+    def _run_fishvol(self, frame, pa: PlannedAssign, plan: Plan,
+                     low: Lowering) -> None:
         from .functions.econ import fisher_volume
 
-        stmt: FishvolStmt = pa.stmt
-        pairs = stmt.pairs
+        stmt: FishvolStmt = pa.stmt  # type: ignore[assignment]
         # expand list aliases: fishvol_rebase({v26},{p26}, …) where v26
         # may itself be a list alias
         expanded: list[tuple[str, str]] = []
-        for vol, price in pairs:
+        for vol, price in stmt.pairs:
             vols = plan.list_aliases.get(vol.lower(), (vol,))
             prices = plan.list_aliases.get(price.lower(), (price,))
             if len(vols) == len(prices) > 1:
                 expanded.extend(zip(vols, prices))
             else:
                 expanded.append((vol, price))
-        out = column_name(stmt.target)
-        result = fisher_volume(
-            df, tuple(expanded), stmt.base_year, "__fish_out",
-            date_col=self.date_col, entity_cols=self.entity_cols,
-        )
-        col = self._scoped_output(pa, out, "__fish_out", low)
-        return result.withColumn(out, col).drop("__fish_out")
+        frame.apply(fisher_volume, tuple(expanded), stmt.base_year,
+                    "__fish_out", **self._operator_options())
+        self._put_output(frame, pa, low, "__fish_out")
 
-    def _run_nlrx(self, df, pa, scalars) -> DataFrame:
+    def _run_nlrx(self, frame, pa: PlannedAssign, scalars: dict[str, object],
+                  low: Lowering) -> None:
         from .functions.nlrx import nlrx
 
-        stmt: NlrxStmt = pa.stmt
-        lamb_raw = stmt.lamb.strip()
+        stmt: NlrxStmt = pa.stmt  # type: ignore[assignment]
+        raw = stmt.lamb.strip()
         try:
-            lamb = float(lamb_raw)
+            lamb = float(raw)
         except ValueError:
-            key = lamb_raw.lower()
-            if key in scalars:
-                lamb = float(scalars[key])
-            else:
-                col = column_name(lamb_raw)
-                row = df.orderBy(self.date_col).select(
-                    F.first(col, ignorenulls=True).alias("v")
-                ).first()
-                if row is None or row["v"] is None:
-                    raise ValueError(f"nlrx lambda {stmt.lamb!r} has no value")
-                lamb = float(row["v"])
+            if raw.lower() in scalars:
+                lamb = scalars[raw.lower()]
+            else:  # a series: its first non-null value
+                low.line = stmt.line
+                lamb = frame.first(f"first({low.column(raw)}, true)", out=raw)
+            if lamb is None:
+                raise FameScriptError(
+                    f"nlrx lambda {stmt.lamb!r} has no value", stmt.line
+                ) from None
         series = [column_name(s) for s in stmt.series]
-        y, weights = series[0], tuple(series[1:])
-        return nlrx(
-            df, lamb, y, weights, column_name(stmt.target),
-            date_col=self.date_col, entity_cols=self.entity_cols,
-        )
+        frame.apply(nlrx, lamb, series[0], tuple(series[1:]), pa.column,
+                    **self._operator_options())
 
-    def _run_point_in_time(
-        self, df: DataFrame, plan: Plan, low: Lowering
-    ) -> DataFrame:
+    def _run_point_in_time(self, frame, plan: Plan, low: Lowering) -> None:
         # sequential per statement: later upserts see earlier results and
         # the last write to a date wins (documented divergence)
         for target_col in sorted(plan.pit_by_target):
             for pa in plan.pit_by_target[target_col]:
-                stmt: PointInTimeStmt = pa.stmt  # type: ignore[assignment]
+                stmt = pa.stmt
                 text = low.lower(stmt.expr, stmt.line)
-                update = low.at_date(stmt.date, text, target_col)
-                df = self._apply(df, low, {target_col: update})
-        return df
+                _apply(frame, low,
+                       {target_col: low.at_date(stmt.date, text, target_col)})
 
     def _extract_local_dbs(self, df: DataFrame, plan: Plan, low: Lowering):
         out: dict[str, DataFrame] = {}
@@ -451,11 +449,6 @@ class FameEngine:
             if cols:
                 out[db] = df.select(*cols)
         return out
-
-
-def _schema(df: DataFrame) -> dict[str, str]:
-    """The frame's columns, lower-cased name -> name (one JVM read)."""
-    return {c.lower(): c for c in df.columns}
 
 
 def run_script(

@@ -48,6 +48,7 @@ def nlrx(
     entity_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Append *out_col* = HP-smoothed *y* with parameter *lamb*."""
+    lamb = float(lamb)
     # applyInPandas resolves each column via df[name], which parses dots
     # as struct access — temporarily rename dot-bearing columns (FAME
     # dot targets like RESULT.A are flat names)

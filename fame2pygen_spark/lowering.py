@@ -107,7 +107,7 @@ class Lowering:
 
     ``scalars`` maps a scalar's lower-case name to the SQL text of its
     value; ``columns`` maps the frame's lower-cased column names to the
-    names themselves and is kept up to date by the caller, or is None
+    names themselves and is kept up to date by the frame, or is None
     when the input columns are unknown (generated code).
     """
 
@@ -140,12 +140,6 @@ class Lowering:
     def take_temps(self) -> dict[str, str]:
         temps, self.temps = self.temps, {}
         return temps
-
-    def track(self, names) -> None:
-        """Record columns added to (or replaced on) the frame."""
-        if self.columns is not None:
-            for name in names:
-                self.columns[name.lower()] = name
 
     def has(self, col: str) -> bool:
         """Whether the frame has *col*, as ``col in df.columns``."""

@@ -314,6 +314,8 @@ def parse_statement(line: str) -> Stmt | None:
     m = _FREQ_RE.match(s)
     if m:
         canonical, _ = normalize_frequency(m.group(1))
+        if canonical not in FREQ_INFO:
+            raise FameScriptError(f"unknown frequency {m.group(1)!r}", line)
         return FreqStmt(canonical, line=line)
 
     if _DATE_ALL_RE.match(s):

@@ -19,6 +19,12 @@ from fame2pygen_spark.codegen import (
     generate_formulas_file, generate_spark_functions, generate_test_script,
     parse_fame_formula,
 )
+from fame2pygen_spark.parser.expressions import DynLookup
+from fame2pygen_spark.parser.grammar import (
+    ChainStmt, ConvertStmt, FishvolStmt, NlrxStmt, PointInTimeStmt,
+    ScalarAssignStmt, SeriesAssignStmt, parse_script,
+)
+from fame2pygen_spark.plans.planner import build_plan
 
 
 def _load_generated(src: str, tmp_path, name: str):
@@ -33,8 +39,8 @@ def _load_generated(src: str, tmp_path, name: str):
 def _assert_frames_equal(a, b):
     assert sorted(a.columns) == sorted(b.columns)
     cols = sorted(a.columns)
-    ra = [tuple(r[c] for c in cols) for r in a.orderBy(cols[0]).collect()]
-    rb = [tuple(r[c] for c in cols) for r in b.orderBy(cols[0]).collect()]
+    ra = [tuple(r[c] for c in cols) for r in a.orderBy(*cols).collect()]
+    rb = [tuple(r[c] for c in cols) for r in b.orderBy(*cols).collect()]
     assert len(ra) == len(rb)
     for x, y in zip(ra, rb):
         for vx, vy in zip(x, y):
@@ -46,11 +52,16 @@ def _assert_frames_equal(a, b):
 
 @pytest.fixture(scope="module")
 def ts(spark):
+    """Monthly 2016-01 .. 2020-12: volumes A and B with their prices PA
+    and PB, and HOLES, null two months in three.  2016 lies inside the
+    default backcast window."""
     rows = [
-        (date(2020, m, 1), float(100 + 10 * m), float(m % 3 == 0) or None)
-        for m in range(1, 13)
+        (date(2016 + k // 12, k % 12 + 1, 1), float(100 + 10 * k),
+         float(50 + 3 * (k % 7)), 1.0 + 0.01 * k, 1.0 + 0.02 * (k % 5),
+         float(k % 3 == 2) or None)
+        for k in range(60)
     ]
-    return spark.createDataFrame(rows, ["DATE", "A", "HOLES"])
+    return spark.createDataFrame(rows, ["DATE", "A", "B", "PA", "PB", "HOLES"])
 
 
 SCRIPTS = {
@@ -78,7 +89,63 @@ SCRIPTS = {
         "v = a - peak",
         'a["2020-05-01"] = 999',
     ],
+    "backcast": ["set bc[t] = a[t+1]/(1+(pct(b[t+1])/100))"],
+    "convert_inferred_freq": ["q = convert(a, q, disc, ave)"],
+    "chain_in_window": [
+        "date 2019-01-01 to 2020-12-01",
+        'ci = $chain("a - b", "2019")',
+        "date *",
+    ],
+    "fishvol_in_window": [
+        "vols = {a, b}",
+        "prices = {pa, pb}",
+        "date 2018-02-01 to 2020-12-01",
+        "fv = fishvol_rebase({vols},{prices},2019)",
+        "date *",
+    ],
+    "nlrx_series_lambda": [
+        "lambda20 = 20",
+        "sm = nlrx(lambda20, a, b, b, b, b, holes, holes)",
+    ],
+    "lookup_converted": [
+        "freq m",
+        "aq = convert(a, q, disc, ave)",
+        'scalar d0 = make(date(q), "2020-04-01")',
+        "scalar x = aq[d0]",
+        "v = x + 0",
+    ],
 }
+
+
+def _kinds(script) -> set[str]:
+    """The statement kinds ``build_plan`` schedules for *script*."""
+    plan = build_plan(parse_script(script))
+    backcasts = {id(pa) for pa in plan.backcasts}
+    kinds = set()
+    for pa in plan.assigns:
+        stmt = pa.stmt
+        if pa.date_filter is not None:
+            kinds.add("date window")
+        if id(pa) in backcasts:
+            kinds.add("backcast")
+        elif isinstance(stmt, ScalarAssignStmt):
+            kinds.add("ser[var] scalar" if isinstance(stmt.expr, DynLookup)
+                      else "scalar")
+        else:
+            kinds.add({
+                SeriesAssignStmt: "series", PointInTimeStmt: "point-in-time",
+                ConvertStmt: "convert", ChainStmt: "chain",
+                FishvolStmt: "fishvol", NlrxStmt: "nlrx",
+            }[type(stmt)])
+    return kinds
+
+
+def test_differential_cases_cover_every_statement_kind():
+    seen = set().union(*map(_kinds, SCRIPTS.values()))
+    assert seen == {
+        "series", "scalar", "ser[var] scalar", "point-in-time", "convert",
+        "backcast", "chain", "fishvol", "nlrx", "date window",
+    }
 
 
 @pytest.mark.parametrize("name", sorted(SCRIPTS))

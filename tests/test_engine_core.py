@@ -614,8 +614,18 @@ def test_unknown_series_raises_before_spark_work(spark):
             run_script(df, ["v = a + 1", "set w = v * bb"])
         assert err.value.line == "set w = v * bb"
         assert "'bb'" in str(err.value)
+        with pytest.raises(FameScriptError) as err:
+            run_script(df, ["v = a + 1", "freq mm", "w = v * 2"])
+        assert err.value.line == "freq mm"
+        assert "unknown frequency 'mm'" in str(err.value)
 
     _no_jobs_started(spark, "fame-unknown-series", run)
+    # a ser[var] lookup resolves its series like any other reference;
+    # only the date scalar's own probe runs before the error
+    with pytest.raises(FameScriptError) as err:
+        run_script(df, ['scalar d = make(date(m), "2020-03-01")',
+                        "scalar x = bb[d]"])
+    assert err.value.line == "scalar x = bb[d]"
 
 
 def test_dependency_cycle_raises_before_spark_work(spark):
