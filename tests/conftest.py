@@ -24,6 +24,10 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .config("spark.local.dir", _SPARK_TMP)
+        # the suite compiles thousands of generated classes and runs many
+        # queries twice (oracle parity, then partitioning invariance); the
+        # default 100-entry cache evicts them, even mid-query, and recompiles
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .getOrCreate()
     )
     yield spark

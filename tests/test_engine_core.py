@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 import gc
 import math
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -651,6 +652,7 @@ def test_dependency_cycle_raises_before_spark_work(spark):
 def test_execute_py4j_round_trips_per_statement(spark):
     """Building a level of SQL-text columns costs a few py4j calls per
     statement; building Columns node by node cost about 75."""
+    from py4j.clientserver import JavaClient
     from py4j.java_gateway import GatewayClient
 
     from fame2pygen_spark import FameEngine
@@ -669,22 +671,35 @@ def test_execute_py4j_round_trips_per_statement(spark):
     df = _lowered_frame(spark)
     df.columns  # noqa: B018 — analyse the input before counting
 
+    # Freeing a py4j proxy costs a delete command. With pinned threads
+    # py4j queues it and a finalizer thread sends it later, so that
+    # thread's sends are earlier tests' garbage: count the deletes this
+    # thread queues, when it queues them, and only this thread's sends.
+    me = threading.get_ident()
     calls = [0]
-    orig = GatewayClient.send_command
+    orig_send = GatewayClient.send_command
+    orig_gc = JavaClient.garbage_collect_object
 
     def counting(client, *args, **kwargs):
-        calls[0] += 1
-        return orig(client, *args, **kwargs)
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return orig_send(client, *args, **kwargs)
 
-    # collect earlier tests' garbage first: freeing a py4j proxy sends
-    # a delete command, which would count against this statement budget
+    def counting_gc(client, target_id, enqueue=True):
+        if enqueue and threading.get_ident() == me:
+            calls[0] += 1
+        return orig_gc(client, target_id, enqueue)
+
+    # collect earlier tests' garbage before counting
     gc.collect()
     gc.disable()
     GatewayClient.send_command = counting
+    JavaClient.garbage_collect_object = counting_gc
     try:
         res = FameEngine().execute(df, plan)
     finally:
-        GatewayClient.send_command = orig
+        GatewayClient.send_command = orig_send
+        JavaClient.garbage_collect_object = orig_gc
         gc.enable()
     assert calls[0] <= 10 * len(script), calls[0]
     assert len(res.df.columns) == 4 + 40
