@@ -121,9 +121,11 @@ def exploded_shingles(
     signature twins, span profiling) are duplicate-insensitive, and
     skipping the distinct saves a full shuffle of the exploded shingle
     strings.  The batch MinHash path dedups IN-ROW instead
-    (:func:`_doc_shingle_sets` + explode): ``min`` over the distinct
+    (:func:`_row_shingle_sets` + explode): ``min`` over the distinct
     set equals ``min`` over the multiset, with the corpus' repeat
-    factor fewer rows through md5 + the 64 affine aggregates."""
+    factor fewer rows through md5 + the 64 affine aggregates.  An id
+    on several rows yields the shingles of each of its rows; grouping
+    by ``doc`` takes their union."""
     nt = df.select(
         F.col(id_col).alias("doc"),
         normalized_text(F.col(text_col)).alias("__nt"),
@@ -348,11 +350,14 @@ def minhash_signatures(
     shuffle carries one partial row per (partition, doc); the groupBy
     key is the document id — uniformly distributed, no skew.
 
-    The explode runs over the per-document DISTINCT shingle array
-    (:func:`_doc_shingle_sets`): ``min`` is duplicate-insensitive, so
-    deduping in-row first is result-identical and cuts the md5 +
-    64-affine aggregation input by the corpus' repeat factor
-    (measured 1.43x on the sf0.1 documents corpus, r11).
+    Ids may repeat: a doc's signature is that of the union of its
+    rows' shingle sets.  The explode runs over the per-ROW distinct
+    shingle arrays (:func:`_row_shingle_sets`), not the per-id union:
+    ``min`` is duplicate-insensitive, so deduping in-row first is
+    result-identical, cuts the md5 + 64-affine aggregation input by the
+    corpus' repeat factor (measured 1.43x on the sf0.1 documents
+    corpus, r11), and the ``groupBy(doc)`` below already unions a
+    doc's rows — no second aggregation.
     """
     # explode_OUTER, then drop the null rows it emits for empty arrays:
     # result-identical to a plain explode (docs shorter than n still
@@ -366,7 +371,7 @@ def minhash_signatures(
     # outer generate, and the explicit null filter binds to the
     # GENERATED attribute, which cannot be pushed below the explode.
     exploded = (
-        _doc_shingle_sets(df, text_col, id_col, n)
+        _row_shingle_sets(df, text_col, id_col, n)
         .select("doc", F.explode_outer("sh").alias("s"))
         .where(F.col("s").isNotNull())
         .withColumn("h", shingle_hash(F.col("s")))
@@ -378,28 +383,21 @@ def minhash_signatures(
     return exploded.groupBy("doc").agg(*aggs)
 
 
-def _doc_shingle_sets(
+def _row_shingle_sets(
     df: DataFrame, text_col: str, id_col: str, n: int = 5
 ) -> DataFrame:
-    """``(doc, sh)`` — per-document DISTINCT shingle array, row-local.
+    """``(doc, sh)`` — one DISTINCT shingle array per input ROW.
 
-    The exact-verify shingle SET is a pure function of the document
-    row, so it needs no aggregation at all: normalization is staged
-    once per doc, the n-gram positions expand inside one ``transform``
-    over the staged column (no per-element re-normalization — the
-    lambda reads a bound column, not the normalization subtree), and
-    ``array_distinct`` dedups in-row.
+    A pure function of the row, so it needs no aggregation:
+    normalization is staged once per row, the n-gram positions expand
+    inside one ``transform`` over the staged column (no per-element
+    re-normalization — the lambda reads a bound column, not the
+    normalization subtree), and ``array_distinct`` dedups in-row.
 
-    This replaces the r10 formulation that re-exploded the corpus into
-    a ``collect_set`` ObjectHashAggregate: column pruning split that
-    combined aggregation into two separate aggregates at planning time
-    (the runtime plan shows a second Generate + ObjectHashAggregate +
-    its own Exchange), and per AppStatusStore stage metrics (r11) the
-    collect_set branch cost ~26x the entire codegen'd MinHash
-    explode+md5+64-min aggregation on the same input.  A projection
-    produces the identical set (``collect_set`` over exploded rows =
-    in-row distinct; downstream Jaccard is order-insensitive) with
-    zero shuffles and zero extra corpus passes.
+    An id on several rows gets several arrays here.  The signature
+    path (:func:`minhash_signatures`) explodes them as they are — its
+    ``groupBy(doc)`` ``min`` already takes the union of a doc's rows;
+    exact verification needs one set per id (:func:`_doc_shingle_sets`).
     """
     nt = df.select(
         F.col(id_col).alias("doc"),
@@ -413,6 +411,30 @@ def _doc_shingle_sets(
         F.transform(idx, lambda i: F.col("__nt").substr(i, F.lit(n)))
     )
     return nt.select("doc", sh.alias("sh"))
+
+
+def _doc_shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, n: int = 5
+) -> DataFrame:
+    """``(doc, sh)`` — exactly one row per document id; ``sh`` is the
+    DISTINCT union of the shingle arrays of every row carrying that id.
+
+    This is the exact-verify shingle set, and it is the set the DuckDB
+    oracle uses (``_sql_x03_ctes``: ``SELECT DISTINCT doc_id, sh``).
+    One row per id is what keeps the verify joins from emitting a pair
+    once per duplicate row, and from pairing a repeated id under each
+    of its texts separately (a per-row Jaccard, not the union's).
+
+    The row-local arrays (:func:`_row_shingle_sets`) go through one
+    ``groupBy(doc)``: a ``collect_list`` ObjectHashAggregate and its
+    exchange.  When ids are unique that aggregation changes no set;
+    it is the price of the id contract.
+    """
+    return (
+        _row_shingle_sets(df, text_col, id_col, n)
+        .groupBy("doc")
+        .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
+    )
 
 
 def min_sig_matches(threshold: float, num_hashes: int, margin: float = 0.15) -> int:
@@ -449,18 +471,23 @@ def minhash_lsh_pairs(
     columns; shingle arrays are joined on *after* candidate dedup, when
     the pair set is small.
 
-    One-pass shingling (r11, supersedes the r10 combined aggregation):
-    the exact-verify shingle sets are a row-local projection
-    (:func:`_doc_shingle_sets` — no aggregation, no exchange, no
-    second corpus explode), and the signatures explode that same
-    distinct array into the codegen'd 64-min aggregation.  The r10
-    single-``groupBy`` formulation was split back into two aggregates
-    by column pruning at planning time, and its ``collect_set``
-    ObjectHashAggregate branch measured ~26x the cost of the entire
-    MinHash aggregation (AppStatusStore stage metrics, r11).  The
-    ``id IS NOT NULL`` head filter keeps all branches canonicalizing
-    identically; it drops no output — both joins on the id and
-    ``id_a < id_b`` already discard null ids.
+    Ids: an id may appear on several rows (an upstream union that
+    repeated rows, or several texts filed under one id).  A doc's
+    shingle set is the union of its rows' sets, for the signature and
+    for the exact Jaccard alike, and each pair is emitted once.
+
+    Shingling: both branches start from the same per-row distinct
+    n-gram arrays (:func:`_row_shingle_sets`).  The signatures explode
+    them into the codegen'd 64-min aggregation, whose ``groupBy(doc)``
+    unions a doc's rows; the exact-verify sets
+    (:func:`_doc_shingle_sets`) gather them into one row per id with a
+    ``collect_list`` of one array per row — no second corpus explode.
+    The r10 formulation instead re-exploded the corpus into a
+    per-shingle ``collect_set``, and that branch measured ~26x the cost
+    of the entire MinHash aggregation (AppStatusStore stage metrics,
+    r11).  The ``id IS NOT NULL`` head filter keeps all branches
+    canonicalizing identically; it drops no output — both joins on the
+    id and ``id_a < id_b`` already discard null ids.
 
     The candidate set is explicitly repartitioned by (id_a, id_b)
     before the distinct: AQE coalesces post-shuffle partitions by
@@ -530,7 +557,10 @@ def minhash_lsh_pairs_keyed(
     *partition_col* value.  This is asserted in-plan (same shuffle as
     the doc→key dedup it replaces; no extra driver action): an id
     appearing under conflicting entities raises at execution time
-    instead of being silently scoped to an arbitrary one.
+    instead of being silently scoped to an arbitrary one.  Repeating
+    an id under the SAME entity is allowed: as in
+    :func:`minhash_lsh_pairs`, the doc's shingle set is the union of its
+    rows, and each pair is emitted once.
     """
     df = _parallelize_input(df.where(F.col(id_col).isNotNull()))
     # distinct (doc, pk) then 1-row-per-doc with an in-plan uniqueness
@@ -656,9 +686,10 @@ def _prefilter_and_verify(
     an (id_a, id_b) candidate pair set.
 
     *shingle_sets*: optional precomputed ``(doc, sh)`` distinct-shingle
-    frame (:func:`_doc_shingle_sets` — a row-local projection, not an
-    aggregation); callers over the full corpus pass it so this
-    function does not re-derive the sets.
+    frame with one row per id (:func:`_doc_shingle_sets`); callers
+    over the full corpus pass it so this function does not re-derive
+    the sets.  Either way the verify joins see one set per id, so a
+    repeated id yields each pair once, with the union's Jaccard.
 
     *participants_only*: restrict shingle-set construction to docs
     appearing in *cand* (ignored when *shingle_sets* is given).  Set
@@ -701,8 +732,8 @@ def _prefilter_and_verify(
         .where(matches >= min_match)
         .select("id_a", "id_b")
     )
-    # exact verification: shingle sets are a row-local projection
-    # (no aggregation — see _doc_shingle_sets)
+    # exact verification against one shingle set per id (the union of
+    # the id's rows — see _doc_shingle_sets)
     base = df
     if shingle_sets is not None:
         participants_only = False
@@ -781,6 +812,12 @@ def incremental_lsh_pairs(
     *is_new* is a Column predicate over *df*'s columns (e.g.
     ``F.col("ingest_day") == today``).
 
+    Ids may repeat, as in :func:`minhash_lsh_pairs`: a doc's shingle
+    set is the union of its rows, and each pair is emitted once.  A doc
+    is new when any of its rows is; on the *corpus_sigs* path every row
+    of an id must agree on *is_new*, since the persisted table already
+    holds the signature of an old id.
+
     *corpus_sigs* is the PRODUCTION path: the persisted signature
     table of the existing corpus (``minhash_signatures`` schema —
     ``doc, mh0..mh{k-1}`` — covering exactly *df*'s non-new docs; the
@@ -814,8 +851,8 @@ def incremental_lsh_pairs(
     if corpus_sigs is None:
         # self-contained path: same one-pass shingling as
         # minhash_lsh_pairs — signatures from the codegen'd 64-min
-        # aggregation over the distinct-shingle explode, exact-verify
-        # sets from the row-local projection (no aggregation)
+        # aggregation over the per-row distinct-shingle explode,
+        # exact-verify sets one row per id (union of the id's rows)
         sigs = minhash_signatures(
             df, text_col, id_col, n=n, num_hashes=num_hashes, seed=seed
         )

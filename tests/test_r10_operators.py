@@ -42,6 +42,82 @@ def test_minhash_lsh_pairs_keyed_duplicate_rows_same_entity_ok(spark):
     assert [(r["id_a"], r["id_b"], r["source"]) for r in out] == [(1, 2, "s1")]
 
 
+def _lsh_lanes(df):
+    """Sorted ``(id_a, id_b, jaccard)`` rows of every LSH lane over
+    *df*; doc 2 is the incremental lanes' one new document."""
+    from pyspark.sql import functions as F
+
+    from fame2pygen_spark.operators.dedup import (
+        incremental_lsh_pairs,
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_keyed,
+        minhash_signatures,
+    )
+
+    is_new = F.col("doc_id") == 2
+    old_sigs = minhash_signatures(df.where(~is_new), "text", "doc_id")
+    outs = {
+        "pairs": minhash_lsh_pairs(df, "text", "doc_id"),
+        "keyed": minhash_lsh_pairs_keyed(df, "text", "doc_id", "source"),
+        "incremental": incremental_lsh_pairs(df, "text", "doc_id", is_new),
+        "incremental_corpus_sigs": incremental_lsh_pairs(
+            df, "text", "doc_id", is_new, corpus_sigs=old_sigs
+        ),
+    }
+    return {
+        lane: sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in out.collect())
+        for lane, out in outs.items()
+    }
+
+
+def test_lsh_lanes_duplicate_rows_emit_each_pair_once(spark):
+    """A doc id repeated on identical rows is one document: every lane
+    (batch, keyed, incremental with and without persisted signatures)
+    emits the pair once, not once per duplicate row."""
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(1, text, "s1"), (1, text, "s1"), (2, text, "s1")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    for lane, pairs in _lsh_lanes(df).items():
+        assert pairs == [(1, 2, 1.0)], lane
+
+
+def test_lsh_lanes_repeated_id_uses_union_of_its_rows(spark):
+    """An id on two rows with different texts has ONE shingle set, the
+    union of its rows' — the DuckDB oracle's ``SELECT DISTINCT doc_id,
+    sh``.  Doc 1's second text is a prefix of its first, so its union
+    is exactly doc 2's set: one pair at Jaccard 1.0, not a second pair
+    at the prefix's own Jaccard."""
+    import duckdb
+
+    from fame2pygen_spark.queries_ext import _sql_x03_ctes
+
+    full = (
+        "the quick brown fox jumps over the lazy dog again and again "
+        "and then it rests"
+    )
+    prefix = full[: int(len(full) * 0.75)]
+    rows = [
+        (1, full, "s1"),
+        (1, prefix, "s1"),
+        (2, full, "s1"),
+        (3, "completely unrelated words about something else entirely", "s1"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?)", [(d, t) for d, t, _ in rows]
+    )
+    oracle = sorted(
+        con.execute(
+            f"WITH {_sql_x03_ctes()} SELECT id_a, id_b, jaccard FROM lsh_pairs"
+        ).fetchall()
+    )
+    assert oracle == [(1, 2, 1.0)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    for lane, pairs in _lsh_lanes(df).items():
+        assert pairs == oracle, lane
+
+
 def test_pagerank_keyed_entities_are_independent(spark):
     """Hand-computed: a 2-cycle in entity A (ranks stay at the 2-node
     fixpoint) and a 3-chain in entity B — B's dangling tail must not
