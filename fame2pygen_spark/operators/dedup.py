@@ -120,12 +120,12 @@ def exploded_shingles(
     Rows are NOT deduplicated — consumers of this helper (streaming
     signature twins, span profiling) are duplicate-insensitive, and
     skipping the distinct saves a full shuffle of the exploded shingle
-    strings.  The batch MinHash path dedups IN-ROW instead
-    (:func:`_row_shingle_sets` + explode): ``min`` over the distinct
-    set equals ``min`` over the multiset, with the corpus' repeat
-    factor fewer rows through md5 + the 64 affine aggregates.  An id
-    on several rows yields the shingles of each of its rows; grouping
-    by ``doc`` takes their union."""
+    strings.  The batch MinHash path explodes the distinct per-id sets
+    instead (:func:`_doc_shingle_sets`): ``min`` over the distinct set
+    equals ``min`` over the multiset, with the corpus' repeat factor
+    fewer rows through md5 + the 64 affine aggregates.  An id on
+    several rows yields the shingles of each of its rows; grouping by
+    ``doc`` takes their union."""
     nt = df.select(
         F.col(id_col).alias("doc"),
         normalized_text(F.col(text_col)).alias("__nt"),
@@ -346,71 +346,37 @@ def minhash_signatures(
     """Bulk MinHash: ``(doc, mh0..mh{k-1})`` — the 100 TB formulation.
 
     explode(shingles) → hash each shingle ONCE → one groupBy(doc) with
-    *num_hashes* ``min`` aggregates.  The mins combine map-side, so the
-    shuffle carries one partial row per (partition, doc); the groupBy
-    key is the document id — uniformly distributed, no skew.
+    *num_hashes* ``min`` aggregates; the groupBy key is the document id
+    — uniformly distributed, no skew.
 
     Ids may repeat: a doc's signature is that of the union of its
-    rows' shingle sets.  The explode runs over the per-ROW distinct
-    shingle arrays (:func:`_row_shingle_sets`), not the per-id union:
-    ``min`` is duplicate-insensitive, so deduping in-row first is
-    result-identical, cuts the md5 + 64-affine aggregation input by the
-    corpus' repeat factor (measured 1.43x on the sf0.1 documents
-    corpus, r11), and the ``groupBy(doc)`` below already unions a
-    doc's rows — no second aggregation.
+    rows' shingle sets, i.e. of its one-row-per-id exact-verify set
+    (:func:`_doc_shingle_sets`).
     """
-    # explode_OUTER, then drop the null rows it emits for empty arrays:
-    # result-identical to a plain explode (docs shorter than n still
-    # produce no signature row), but a plain explode makes Catalyst
-    # infer a `size(sh) > 0 AND isnotnull(sh)` filter below the
-    # Generate, substitute sh's full defining expression into it, and
-    # push THAT below the repartition exchange — re-running the
-    # normalization regex per shingle position, twice, on the
-    # pre-repartition partitioning (measured r11: a 16+ core-second
-    # single-task scan stage at sf0.1).  No filter is inferred for an
-    # outer generate, and the explicit null filter binds to the
-    # GENERATED attribute, which cannot be pushed below the explode.
-    exploded = (
-        _row_shingle_sets(df, text_col, id_col, n)
-        .select("doc", F.explode_outer("sh").alias("s"))
-        .where(F.col("s").isNotNull())
-        .withColumn("h", shingle_hash(F.col("s")))
+    return _set_signatures(
+        _doc_shingle_sets(df, text_col, id_col, n), num_hashes, seed
     )
+
+
+def _set_signatures(sets: DataFrame, num_hashes: int, seed: int) -> DataFrame:
+    """``(doc, mh0..mh{k-1})`` of one-row-per-id ``(doc, sh)`` sets.
+
+    *sets* leaves the aggregation already hash-partitioned by ``doc``,
+    so the explode and the ``groupBy(doc)`` below need no exchange of
+    their own, and each distinct shingle of a doc is hashed once.  The
+    aggregates are SQL text: built as Column trees they cost ~100 py4j
+    round trips each, as text about four.
+    """
     aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MERSENNE_31)).alias(f"mh{j}")
+        F.expr(f"min(({a} * h + {b}) % {MERSENNE_31}) AS mh{j}")
         for j, (a, b) in enumerate(_affine_params(num_hashes, seed))
     ]
-    return exploded.groupBy("doc").agg(*aggs)
-
-
-def _row_shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int = 5
-) -> DataFrame:
-    """``(doc, sh)`` — one DISTINCT shingle array per input ROW.
-
-    A pure function of the row, so it needs no aggregation:
-    normalization is staged once per row, the n-gram positions expand
-    inside one ``transform`` over the staged column (no per-element
-    re-normalization — the lambda reads a bound column, not the
-    normalization subtree), and ``array_distinct`` dedups in-row.
-
-    An id on several rows gets several arrays here.  The signature
-    path (:func:`minhash_signatures`) explodes them as they are — its
-    ``groupBy(doc)`` ``min`` already takes the union of a doc's rows;
-    exact verification needs one set per id (:func:`_doc_shingle_sets`).
-    """
-    nt = df.select(
-        F.col(id_col).alias("doc"),
-        normalized_text(F.col(text_col)).alias("__nt"),
+    return (
+        sets.selectExpr("doc", "explode(sh) AS s")
+        .select("doc", shingle_hash(F.col("s")).alias("h"))
+        .groupBy("doc")
+        .agg(*aggs)
     )
-    idx = F.when(
-        F.length("__nt") >= n,
-        F.sequence(F.lit(1), F.length("__nt") - F.lit(n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.array_distinct(
-        F.transform(idx, lambda i: F.col("__nt").substr(i, F.lit(n)))
-    )
-    return nt.select("doc", sh.alias("sh"))
 
 
 def _doc_shingle_sets(
@@ -419,21 +385,37 @@ def _doc_shingle_sets(
     """``(doc, sh)`` — exactly one row per document id; ``sh`` is the
     DISTINCT union of the shingle arrays of every row carrying that id.
 
-    This is the exact-verify shingle set, and it is the set the DuckDB
-    oracle uses (``_sql_x03_ctes``: ``SELECT DISTINCT doc_id, sh``).
-    One row per id is what keeps the verify joins from emitting a pair
-    once per duplicate row, and from pairing a repeated id under each
-    of its texts separately (a per-row Jaccard, not the union's).
+    This is the exact-verify shingle set and the signature input, and
+    it is the set the DuckDB oracle uses (``_sql_x03_ctes``:
+    ``SELECT DISTINCT doc_id, sh``).  One row per id is what keeps the
+    verify joins from emitting a pair once per duplicate row, and from
+    pairing a repeated id under each of its texts separately (a
+    per-row Jaccard, not the union's).
 
-    The row-local arrays (:func:`_row_shingle_sets`) go through one
-    ``groupBy(doc)``: a ``collect_list`` ObjectHashAggregate and its
-    exchange.  When ids are unique that aggregation changes no set;
-    it is the price of the id contract.
+    Each row's distinct n-grams are built row-locally first:
+    normalization is staged once per row, the n-gram positions expand
+    inside one ``transform`` over the staged column (the lambda reads a
+    bound column, not the normalization subtree, so nothing is
+    re-normalized per element), and ``array_distinct`` dedups in-row.
+    One ``groupBy(doc)`` — a ``collect_list`` ObjectHashAggregate and
+    its exchange — then unions an id's rows.  When ids are unique that
+    aggregation changes no set; it is the price of the id contract.
     """
+    # sequence(1, 0) in Spark counts DOWN, so texts shorter than n get
+    # an explicit empty array
+    sh = (
+        f"array_distinct(transform(CASE WHEN length(__nt) >= {n} "
+        f"THEN sequence(1, length(__nt) - {n - 1}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, i -> substr(__nt, i, {n})))"
+    )
     return (
-        _row_shingle_sets(df, text_col, id_col, n)
+        df.select(
+            F.col(id_col).alias("doc"),
+            normalized_text(F.col(text_col)).alias("__nt"),
+        )
+        .selectExpr("doc", f"{sh} AS sh")
         .groupBy("doc")
-        .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
+        .agg(F.expr("array_distinct(flatten(collect_list(sh))) AS sh"))
     )
 
 
@@ -476,18 +458,19 @@ def minhash_lsh_pairs(
     shingle set is the union of its rows' sets, for the signature and
     for the exact Jaccard alike, and each pair is emitted once.
 
-    Shingling: both branches start from the same per-row distinct
-    n-gram arrays (:func:`_row_shingle_sets`).  The signatures explode
-    them into the codegen'd 64-min aggregation, whose ``groupBy(doc)``
-    unions a doc's rows; the exact-verify sets
-    (:func:`_doc_shingle_sets`) gather them into one row per id with a
-    ``collect_list`` of one array per row — no second corpus explode.
-    The r10 formulation instead re-exploded the corpus into a
-    per-shingle ``collect_set``, and that branch measured ~26x the cost
-    of the entire MinHash aggregation (AppStatusStore stage metrics,
-    r11).  The ``id IS NOT NULL`` head filter keeps all branches
-    canonicalizing identically; it drops no output — both joins on the
-    id and ``id_a < id_b`` already discard null ids.
+    Shingling: the corpus is shingled once.  The one-row-per-id
+    distinct sets (:func:`_doc_shingle_sets`) feed both branches: the
+    signatures explode them into the 64-min aggregation, which needs
+    no exchange of its own (the sets' ``groupBy(doc)`` already
+    hash-partitioned them by doc), and the exact verify joins them by
+    id.  Both branches share the sets' exchange, so normalization and
+    the n-gram ``transform`` run once per row.  The r10 formulation
+    instead re-exploded the corpus into a per-shingle ``collect_set``,
+    and that branch measured ~26x the cost of the entire MinHash
+    aggregation (AppStatusStore stage metrics, r11).  The
+    ``id IS NOT NULL`` head filter keeps all branches canonicalizing
+    identically; it drops no output — both joins on the id and
+    ``id_a < id_b`` already discard null ids.
 
     The candidate set is explicitly repartitioned by (id_a, id_b)
     before the distinct: AQE coalesces post-shuffle partitions by
@@ -500,9 +483,8 @@ def minhash_lsh_pairs(
     pair keys are uniformly distributed, no skew.
     """
     df = _parallelize_input(df.where(F.col(id_col).isNotNull()))
-    sigs = minhash_signatures(
-        df, text_col, id_col, n=n, num_hashes=num_hashes, seed=seed
-    )
+    sets = _doc_shingle_sets(df, text_col, id_col, n)
+    sigs = _set_signatures(sets, num_hashes, seed)
     banded = _banded_buckets(sigs, num_hashes, bands, max_bucket)
 
     left = banded.select("band", "bh", F.col("doc").alias("id_a"))
@@ -519,8 +501,7 @@ def minhash_lsh_pairs(
 
     return _prefilter_and_verify(
         df, cand, sigs, text_col, id_col,
-        n=n, num_hashes=num_hashes, threshold=threshold,
-        shingle_sets=_doc_shingle_sets(df, text_col, id_col, n),
+        n=n, num_hashes=num_hashes, threshold=threshold, shingle_sets=sets,
     )
 
 
@@ -591,9 +572,8 @@ def minhash_lsh_pairs_keyed(
             .alias("__pk"),
         )
     )
-    sigs = minhash_signatures(
-        df, text_col, id_col, n=n, num_hashes=num_hashes, seed=seed
-    )
+    sets = _doc_shingle_sets(df, text_col, id_col, n)
+    sigs = _set_signatures(sets, num_hashes, seed)
     banded = _banded_buckets(sigs, num_hashes, bands, max_bucket, keys=keys)
 
     left = banded.select("__pk", "band", "bh", F.col("doc").alias("id_a"))
@@ -614,8 +594,7 @@ def minhash_lsh_pairs_keyed(
     )
     verified = _prefilter_and_verify(
         df, cand.select("id_a", "id_b"), sigs, text_col, id_col,
-        n=n, num_hashes=num_hashes, threshold=threshold,
-        shingle_sets=_doc_shingle_sets(df, text_col, id_col, n),
+        n=n, num_hashes=num_hashes, threshold=threshold, shingle_sets=sets,
     )
     # both members of a pair share one entity value (the band join is
     # key-equi and doc→key is unique), so this re-attach is 1:1
@@ -643,21 +622,17 @@ def _banded_buckets(
     and therefore the cap window — is additionally keyed by ``__pk``
     (the entity-scoped lane)."""
     rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"mh{b * rows_per_band + r}").cast("string")
-                           for r in range(rows_per_band)]
-                )
-            ).alias("bh"),
+
+    def band(b: int) -> str:
+        mh = ", ".join(
+            f"CAST(mh{b * rows_per_band + r} AS STRING)"
+            for r in range(rows_per_band)
         )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        "doc", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+        return f"named_struct('band', {b}, 'bh', md5(concat_ws(',', {mh})))"
+
+    banded = sigs.selectExpr(
+        "doc", f"inline(array({', '.join(band(b) for b in range(bands))}))"
+    )
 
     if keys is not None:
         banded = banded.join(keys, on="doc")
@@ -705,10 +680,12 @@ def _prefilter_and_verify(
     operator's definition, not an approximation bolted on.  Bound: for
     a true-Jaccard-0.6 pair, matches ~ Binomial(64, 0.6);
     P(X < min_sig_matches(0.6, 64)=29) < 7e-3.
-    Signatures are packed into one array column: the joins carry 2
-    columns instead of 2×num_hashes, and the match count is a single
-    zip_with (per-element work is one comparison — no invariant
-    subtrees, so the HOF re-evaluation pitfall doesn't apply).
+    Signatures are packed into one array column, one SQL ``array(…)``
+    over the ``mh`` columns (as a Column tree it cost a py4j round trip
+    per component): the joins carry 2 columns instead of
+    2×num_hashes, and the match count is a single zip_with
+    (per-element work is one comparison — no invariant subtrees, so
+    the HOF re-evaluation pitfall doesn't apply).
     Measured at the 10× tier (r11, 15.7M candidate pairs, quiet-steal
     decomposition): the zip_with runs ~450 ns/pair; an "optimized"
     sum of 64 codegen'd element_at equality terms was 4.7× SLOWER
@@ -716,20 +693,14 @@ def _prefilter_and_verify(
     generated method past the JIT limits.  Keep the zip_with.
     """
     min_match = min_sig_matches(threshold, num_hashes)
-    packed = sigs.select(
-        "doc", F.array(*[F.col(f"mh{j}") for j in range(num_hashes)]).alias("sig")
-    )
-    matches = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    )
+    sig = f"array({', '.join(f'mh{j}' for j in range(num_hashes))})"
     prefiltered = (
-        cand.join(packed.select(F.col("doc").alias("id_a"),
-                                F.col("sig").alias("sig_a")), on="id_a")
-        .join(packed.select(F.col("doc").alias("id_b"),
-                            F.col("sig").alias("sig_b")), on="id_b")
-        .where(matches >= min_match)
+        cand.join(sigs.selectExpr("doc AS id_a", f"{sig} AS sig_a"), on="id_a")
+        .join(sigs.selectExpr("doc AS id_b", f"{sig} AS sig_b"), on="id_b")
+        .where(
+            "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
+            f" >= {min_match}"
+        )
         .select("id_a", "id_b")
     )
     # exact verification against one shingle set per id (the union of
@@ -762,21 +733,16 @@ def _prefilter_and_verify(
     # pushdown below the projection duplicates the jaccard expression
     # (one copy in the Filter, one in the Project); dropping the
     # array_union halves what that duplication costs.
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = F.round(
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-    )
-    verified = (
+    inter = "size(array_intersect(sh_a, sh_b))"
+    union = f"(size(sh_a) + size(sh_b) - {inter})"
+    jac = f"round(CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END, 6)"
+    return (
         prefiltered
-        .join(sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")),
-              on="id_a")
-        .join(sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b")),
-              on="id_b")
-        .withColumn("jaccard", jac)
+        .join(sh.selectExpr("doc AS id_a", "sh AS sh_a"), on="id_a")
+        .join(sh.selectExpr("doc AS id_b", "sh AS sh_b"), on="id_b")
+        .selectExpr("id_a", "id_b", f"{jac} AS jaccard")
         .where(F.col("jaccard") >= threshold)
     )
-    return verified.select("id_a", "id_b", "jaccard")
 
 
 def incremental_lsh_pairs(
@@ -816,7 +782,7 @@ def incremental_lsh_pairs(
     set is the union of its rows, and each pair is emitted once.  A doc
     is new when any of its rows is; on the *corpus_sigs* path every row
     of an id must agree on *is_new*, since the persisted table already
-    holds the signature of an old id.
+    holds the signature of an old id (``validate_corpus`` checks it).
 
     *corpus_sigs* is the PRODUCTION path: the persisted signature
     table of the existing corpus (``minhash_signatures`` schema —
@@ -841,22 +807,20 @@ def incremental_lsh_pairs(
     exact-verify join for lack of shingles (wasted candidates, and
     masked recall loss if the id was supposed to be in *df*).  Pass
     ``validate_corpus=True`` on the production path to fail loudly
-    instead: it anti-joins the two id sets both ways and checks
-    per-doc signature multiplicity (duplicate rows = the at-least-once
-    double-append corruption; id sets alone cannot see it), all over
-    ids only, raising ``ValueError`` with the drift counts.
+    instead: it anti-joins the two id sets both ways, checks per-doc
+    signature multiplicity (duplicate rows = the at-least-once
+    double-append corruption; id sets alone cannot see it) and that no
+    new row carries an id of *corpus_sigs*, all over ids only, raising
+    ``ValueError`` with the drift counts.
     """
     df = _parallelize_input(df.where(F.col(id_col).isNotNull()))
     shingle_sets = None
     if corpus_sigs is None:
         # self-contained path: same one-pass shingling as
-        # minhash_lsh_pairs — signatures from the codegen'd 64-min
-        # aggregation over the per-row distinct-shingle explode,
-        # exact-verify sets one row per id (union of the id's rows)
-        sigs = minhash_signatures(
-            df, text_col, id_col, n=n, num_hashes=num_hashes, seed=seed
-        )
+        # minhash_lsh_pairs — one set per id (union of the id's rows)
+        # feeds the signatures and the exact verify
         shingle_sets = _doc_shingle_sets(df, text_col, id_col, n)
+        sigs = _set_signatures(shingle_sets, num_hashes, seed)
     else:
         if validate_corpus:
             old_ids = df.where(~is_new).select(F.col(id_col).alias("doc"))
@@ -880,6 +844,14 @@ def incremental_lsh_pairs(
                     .distinct()
                 )
                 .unionAll(dup_ids)
+                # an id both persisted and among the new rows would get
+                # two signature rows and emit each of its pairs twice
+                .unionAll(
+                    df.where(is_new).select(F.col(id_col).alias("doc"))
+                    .join(sig_ids, on="doc", how="left_semi")
+                    .distinct()
+                    .select(F.lit("new_id_in_corpus_sigs").alias("kind"))
+                )
                 .groupBy("kind").count().collect()
             )
             if drift:
@@ -932,9 +904,7 @@ def incremental_lsh_pairs(
 
 def _sym(edges: DataFrame) -> DataFrame:
     """Symmetric closure of an (u, v) edge list."""
-    return edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    return edges.union(edges.selectExpr("v AS u", "u AS v"))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -950,13 +920,11 @@ def _large_star(edges: DataFrame) -> DataFrame:
     high-degree hub node costs one combiner per map partition — the
     skew-safety property the Kiveris formulation is chosen for."""
     sym = _sym(edges)
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn")).select(
-        "u", F.least(F.col("mn"), F.col("u")).alias("mn")
-    )
+    mins = sym.groupBy("u").agg(F.expr("least(min(v), u) AS mn"))
     return (
         sym.join(mins, on="u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+        .where("v > u")
+        .selectExpr("v AS u", "mn AS v")
         .distinct()
     )
 
@@ -970,16 +938,92 @@ def _small_star(edges: DataFrame) -> DataFrame:
     greatest/least re-orientation + distinct pass is a no-op and is
     skipped — one full shuffle saved per round.  Output rows (node, mn)
     satisfy node > mn, preserving the orientation invariant."""
-    mins = edges.groupBy("u").agg(F.min("v").alias("mn"))
-    relinked = (
+    mins = edges.groupBy("u").agg(F.expr("min(v) AS mn"))
+    return (
         edges.join(mins, on="u")
-        .select(F.col("v").alias("node"), F.col("mn"))
-        .union(mins.select(F.col("u").alias("node"), F.col("mn")))
-        .where(F.col("node") != F.col("mn"))
-        .select(F.col("node").alias("u"), F.col("mn").alias("v"))
+        .selectExpr("v AS node", "mn")
+        .union(mins.selectExpr("u AS node", "mn"))
+        .where("node != mn")
+        .selectExpr("node AS u", "mn AS v")
         .distinct()
     )
-    return relinked
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Whether the oriented edge set is a star forest: every ``u`` has
+    exactly one out-edge and no node is both a ``u`` and a ``v``.
+
+    One job over the per-node (out-degree, occurrences) counts — a
+    groupBy keyed by node (map-side partial sums) and a one-row count
+    of the nodes that break the rule."""
+    bad = (
+        edges.selectExpr(
+            "inline(array(named_struct('node', u, 'out', 1), "
+            "named_struct('node', v, 'out', 0)))"
+        )
+        .groupBy("node")
+        .agg(F.expr("sum(out) AS o"), F.expr("count(1) AS c"))
+        .agg(F.expr("count_if(o > 1 OR (o = 1 AND c > 1)) AS bad"))
+        .first()["bad"]
+    )
+    return bad == 0
+
+
+def _components(
+    pairs: DataFrame, id_a: str, id_b: str, max_iterations: int = 25
+) -> DataFrame:
+    """``(doc, component, cluster_size)`` of an undirected pair list —
+    star rounds until the first star forest, then one groupBy by root.
+
+    Convergence rule: a star forest is a fixpoint of both star rounds
+    (large-star re-emits each leaf→root edge, small-star each u's one
+    edge), and the rounds keep the components, so at the first round
+    whose output is a star forest each star is one component, rooted
+    at its minimum id (edges point high→low).  The loop stops there.
+
+    Lineage is truncated with a LAZY ``localCheckpoint`` of the
+    canonical input edges and of every round: the round's star-forest
+    check is the round's only action, and it materializes the
+    checkpoint blocks in the same job (no separate count job, no
+    emptiness probe).  The input pairs are read once, when the first
+    round's job fills the canonical checkpoint — callers pass lazy LSH
+    plans.
+
+    The output groupBy collects each root's leaves into one row (8
+    bytes per member) and explodes them with the root.
+    """
+    # canonical high→low orientation up front: the star rounds rely on
+    # this invariant to skip their re-orientation/dedup shuffles
+    edges = (
+        pairs.select(
+            F.col(id_a).cast("long").alias("a"),
+            F.col(id_b).cast("long").alias("b"),
+        )
+        .selectExpr("greatest(a, b) AS u", "least(a, b) AS v")
+        .where("u != v")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    for _ in range(max_iterations):
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        if _is_star_forest(edges):
+            # star forest: u → root; roots appear only on the v side
+            return (
+                edges.groupBy("v")
+                .agg(F.expr("collect_list(u) AS m"))
+                .selectExpr(
+                    "explode(concat(array(v), m)) AS doc",
+                    "v AS component",
+                    "CAST(size(m) + 1 AS BIGINT) AS cluster_size",
+                )
+            )
+    # a non-converged edge set is not a star forest; returning it
+    # silently would yield wrong (doc, component) assignments
+    raise RuntimeError(
+        f"connected_components did not reach the large-star/small-star "
+        f"fixpoint (a star forest) within {max_iterations} iterations; "
+        f"raise max_iterations (needs O(log^2 n) rounds)"
+    )
 
 
 def connected_components(
@@ -995,10 +1039,11 @@ def connected_components(
     Alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond", 2014): converges in
     O(log²) rounds — each round is one groupBy-min plus one equi-join,
-    both keyed by node id (uniform, no skew).  Lineage is truncated
-    with ``localCheckpoint`` every round, the standard guard for
-    iterative DataFrame algorithms (without it the plan doubles per
-    iteration and the driver OOMs planning round ~20).
+    both keyed by node id (uniform, no skew), and the loop stops at the
+    first round whose output is a star forest (see :func:`_components`).
+    Lineage is truncated with ``localCheckpoint`` every round, the
+    standard guard for iterative DataFrame algorithms (without it the
+    plan doubles per iteration and the driver OOMs planning round ~20).
 
     Every doc that appears in *pairs* is returned exactly once;
     singleton docs (no pairs) are the caller's concern — they are their
@@ -1007,64 +1052,8 @@ def connected_components(
     is only feasible at test scale — this implementation is the 100 TB
     path.
     """
-    # canonical high→low orientation up front: the star rounds rely on
-    # this invariant to skip their re-orientation/dedup shuffles
-    raw = pairs.select(
-        F.col(id_a).cast("long").alias("a"),
-        F.col(id_b).cast("long").alias("b"),
-    )
-    edges = (
-        raw.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if not edges.head(1):
-        return edges.select(
-            F.col("u").alias("doc"), F.col("v").alias("component")
-        )
-
-    prev_sig = None
-    converged = False
-    for _ in range(max_iterations):
-        # eager=False fuses the checkpoint with the convergence check
-        # (the pagerank idiom): the signature aggregation below is the
-        # round's ONLY action — it computes every partition (global
-        # agg), materializing the checkpoint blocks and truncating
-        # lineage in the same job, where eager=True ran a separate
-        # internal count() job first.  One job per round instead of
-        # two; the iteration chain is serial, so each saved job launch
-        # is wall time off x09/x14/capstone and every cluster-resolving
-        # lane.  Results identical: same star rounds, same signature,
-        # same fixpoint test.
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        sig = edges.agg(
-            F.count("*").alias("n"),
-            # decimal sum: int64 hash values overflow an ANSI long sum
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        # a non-converged edge set is not a star forest; returning it
-        # silently would yield wrong (doc, component) assignments
-        raise RuntimeError(
-            f"connected_components did not reach the large-star/small-star "
-            f"fixpoint within {max_iterations} iterations; raise "
-            f"max_iterations (needs O(log^2 n) rounds)"
-        )
-
-    # converged edge set is a star forest (node → root); roots appear
-    # only on the v side
-    return edges.select(
-        F.col("u").alias("doc"), F.col("v").alias("component")
-    ).union(
-        edges.select("v", "v").distinct()
+    return _components(pairs, id_a, id_b, max_iterations).select(
+        "doc", "component"
     )
 
 
@@ -1077,14 +1066,10 @@ def duplicate_clusters(
     The post-LSH step every training-data pipeline needs: pair lists
     from :func:`minhash_lsh_pairs` / :func:`simhash_near_dups` become
     disjoint clusters; the minimum id is the canonical survivor and
-    everything else is droppable."""
-    comp = connected_components(pairs, id_a, id_b)
-    w = Window.partitionBy("component")
-    return comp.select(
-        "doc",
-        "component",
-        F.count("*").over(w).cast("long").alias("cluster_size"),
-        (F.col("doc") == F.col("component")).alias("is_canonical"),
+    everything else is droppable.  Sizes come from the same groupBy by
+    root that lists the members — no second pass."""
+    return _components(pairs, id_a, id_b).selectExpr(
+        "doc", "component", "cluster_size", "doc = component AS is_canonical"
     )
 
 

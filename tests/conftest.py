@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import gc
 import os
+import threading
 
 import pytest
 from pyspark.sql import SparkSession
@@ -32,6 +35,54 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture()
+def py4j_calls():
+    """``with py4j_calls() as calls:`` counts in ``calls[0]`` the py4j
+    round trips made inside the block."""
+    return _count_py4j_calls
+
+
+@contextlib.contextmanager
+def _count_py4j_calls():
+    """Count the py4j round trips made inside the block: this thread's
+    sends plus the proxy deletes it queues, with ``gc`` paused.
+
+    Freeing a py4j proxy costs a delete command. With pinned threads
+    py4j queues it and a finalizer thread sends it later, so that
+    thread's sends are earlier tests' garbage: count the deletes this
+    thread queues, when it queues them, and only this thread's sends.
+    Yields a one-element list holding the count."""
+    from py4j.clientserver import JavaClient
+    from py4j.java_gateway import GatewayClient
+
+    me = threading.get_ident()
+    calls = [0]
+    orig_send = GatewayClient.send_command
+    orig_gc = JavaClient.garbage_collect_object
+
+    def counting(client, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return orig_send(client, *args, **kwargs)
+
+    def counting_gc(client, target_id, enqueue=True):
+        if enqueue and threading.get_ident() == me:
+            calls[0] += 1
+        return orig_gc(client, target_id, enqueue)
+
+    # collect earlier tests' garbage before counting
+    gc.collect()
+    gc.disable()
+    GatewayClient.send_command = counting
+    JavaClient.garbage_collect_object = counting_gc
+    try:
+        yield calls
+    finally:
+        GatewayClient.send_command = orig_send
+        JavaClient.garbage_collect_object = orig_gc
+        gc.enable()
 
 
 def month_starts(start: dt.date, n: int) -> list[dt.date]:

@@ -9,9 +9,7 @@ of generated code strings.
 from __future__ import annotations
 
 import datetime as dt
-import gc
 import math
-import threading
 
 import pytest
 from pyspark.sql import Row
@@ -649,12 +647,9 @@ def test_dependency_cycle_raises_before_spark_work(spark):
 # ------------------------------------------------------- py4j round trips
 
 
-def test_execute_py4j_round_trips_per_statement(spark):
+def test_execute_py4j_round_trips_per_statement(spark, py4j_calls):
     """Building a level of SQL-text columns costs a few py4j calls per
     statement; building Columns node by node cost about 75."""
-    from py4j.clientserver import JavaClient
-    from py4j.java_gateway import GatewayClient
-
     from fame2pygen_spark import FameEngine
     from fame2pygen_spark.parser.grammar import parse_script
     from fame2pygen_spark.plans.planner import build_plan
@@ -671,35 +666,7 @@ def test_execute_py4j_round_trips_per_statement(spark):
     df = _lowered_frame(spark)
     df.columns  # noqa: B018 — analyse the input before counting
 
-    # Freeing a py4j proxy costs a delete command. With pinned threads
-    # py4j queues it and a finalizer thread sends it later, so that
-    # thread's sends are earlier tests' garbage: count the deletes this
-    # thread queues, when it queues them, and only this thread's sends.
-    me = threading.get_ident()
-    calls = [0]
-    orig_send = GatewayClient.send_command
-    orig_gc = JavaClient.garbage_collect_object
-
-    def counting(client, *args, **kwargs):
-        if threading.get_ident() == me:
-            calls[0] += 1
-        return orig_send(client, *args, **kwargs)
-
-    def counting_gc(client, target_id, enqueue=True):
-        if enqueue and threading.get_ident() == me:
-            calls[0] += 1
-        return orig_gc(client, target_id, enqueue)
-
-    # collect earlier tests' garbage before counting
-    gc.collect()
-    gc.disable()
-    GatewayClient.send_command = counting
-    JavaClient.garbage_collect_object = counting_gc
-    try:
+    with py4j_calls() as calls:
         res = FameEngine().execute(df, plan)
-    finally:
-        GatewayClient.send_command = orig_send
-        JavaClient.garbage_collect_object = orig_gc
-        gc.enable()
     assert calls[0] <= 10 * len(script), calls[0]
     assert len(res.df.columns) == 4 + 40

@@ -485,6 +485,88 @@ def test_connected_components_empty_and_long_chain(spark):
         connected_components(chain, max_iterations=1)
 
 
+def _union_find_clusters(pairs):
+    """``{doc: (component, cluster_size)}`` of a pair list by union-find,
+    the component being the minimum id."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = {x: find(x) for x in parent}
+    sizes = {}
+    for r in roots.values():
+        sizes[r] = sizes.get(r, 0) + 1
+    return {x: (r, sizes[r]) for x, r in roots.items()}
+
+
+def _random_graph(seed):
+    """Chains, stars, cliques and disjoint random parts on shuffled ids,
+    with repeated pairs, both orientations and self-loops."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 10_000), 400)
+    pairs, k = [], 0
+
+    def take(n):
+        nonlocal k
+        k += n
+        return ids[k - n:k]
+
+    for _ in range(3):  # chains: the slow-convergence case
+        c = take(rng.randint(2, 30))
+        pairs += [(c[i], c[i + 1]) for i in range(len(c) - 1)]
+    for _ in range(3):  # stars around a random hub, not the minimum
+        s = take(rng.randint(2, 20))
+        pairs += [(s[0], x) for x in s[1:]]
+    for _ in range(2):  # cliques
+        q = take(rng.randint(3, 8))
+        pairs += [(a, b) for a in q for b in q if a < b]
+    part = take(80)  # a sparse random part, possibly several components
+    pairs += [tuple(rng.sample(part, 2)) for _ in range(60)]
+    pairs += [(b, a) for a, b in rng.sample(pairs, 10)]
+    pairs += rng.sample(pairs, 10) + [(ids[-1], ids[-1])]
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [0, 1, None])
+def test_connected_components_match_union_find(spark, seed):
+    """Seeded random graphs (and the empty input) through
+    ``connected_components`` and ``duplicate_clusters``: the same
+    components, sizes and canonical docs as a union-find."""
+    from fame2pygen_spark.operators.dedup import (
+        connected_components,
+        duplicate_clusters,
+    )
+
+    pairs = [] if seed is None else _random_graph(seed)
+    # a self-loop alone puts no doc in a cluster
+    expect = _union_find_clusters([(a, b) for a, b in pairs if a != b])
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+
+    comp = connected_components(df).collect()
+    assert len(comp) == len(expect)
+    assert {r["doc"]: r["component"] for r in comp} == {
+        d: c for d, (c, _) in expect.items()
+    }
+    clusters = duplicate_clusters(df).collect()
+    assert len(clusters) == len(expect)
+    assert {
+        r["doc"]: (r["component"], r["cluster_size"], r["is_canonical"])
+        for r in clusters
+    } == {d: (c, n, d == c) for d, (c, n) in expect.items()}
+
+
 def test_tfidf_top_terms(spark):
     """Hand-checkable corpus: a term unique to one doc must outrank
     terms shared across all docs."""

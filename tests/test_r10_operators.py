@@ -118,6 +118,48 @@ def test_lsh_lanes_repeated_id_uses_union_of_its_rows(spark):
         assert pairs == oracle, lane
 
 
+def test_incremental_validate_corpus_rejects_id_both_old_and_new(spark):
+    """An id persisted in ``corpus_sigs`` and also on a new row would
+    get two signature rows and emit its pair twice; ``validate_corpus``
+    must refuse it."""
+    from pyspark.sql import functions as F
+
+    from fame2pygen_spark.operators.dedup import (
+        incremental_lsh_pairs,
+        minhash_signatures,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    df = spark.createDataFrame(
+        [(1, text, 0), (1, text, 1), (2, text, 1)],
+        "doc_id long, text string, day int",
+    )
+    is_new = F.col("day") == 1
+    old_sigs = minhash_signatures(df.where(~is_new), "text", "doc_id")
+    with pytest.raises(ValueError, match="new_id_in_corpus_sigs=1"):
+        incremental_lsh_pairs(
+            df, "text", "doc_id", is_new,
+            corpus_sigs=old_sigs, validate_corpus=True,
+        ).collect()
+
+
+def test_minhash_lsh_pairs_build_py4j_budget(spark, py4j_calls):
+    """Building the lazy pair plan, with no action, stays a few hundred
+    py4j round trips: the wide expression lists (64 signature
+    aggregates, 16 band hashes, the packed signature) are SQL text.
+    Built as Column trees node by node they cost about 9 000."""
+    from fame2pygen_spark.operators.dedup import minhash_lsh_pairs
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "the quick brown cat")],
+        "id long, text string",
+    )
+    df.columns  # noqa: B018 — analyse the input before counting
+    with py4j_calls() as calls:
+        minhash_lsh_pairs(df, "text", "id")
+    assert calls[0] <= 2500, calls[0]
+
+
 def test_pagerank_keyed_entities_are_independent(spark):
     """Hand-computed: a 2-cycle in entity A (ranks stay at the 2-node
     fixpoint) and a 3-chain in entity B — B's dangling tail must not
@@ -267,9 +309,9 @@ def test_iterative_loops_checkpoint_rounds_lazily(spark, monkeypatch):
     }
     # one 7-node component rooted at 0; node 0 is canonical
     assert out == {(i, 0, 7, i == 0) for i in range(7)}
-    # call 0 = initial edge canonicalization (eager, feeds head(1));
-    # every star ROUND after it must be lazy
-    assert calls[0] is True
+    # call 0 = initial edge canonicalization (lazy: the first round's
+    # job fills it); every star ROUND after it must be lazy
+    assert calls[0] is False
     assert len(calls) >= 3 and all(e is False for e in calls[1:])
 
     calls.clear()
