@@ -120,12 +120,13 @@ def exploded_shingles(
     Rows are NOT deduplicated — consumers of this helper (streaming
     signature twins, span profiling) are duplicate-insensitive, and
     skipping the distinct saves a full shuffle of the exploded shingle
-    strings.  The batch MinHash path explodes the distinct per-id sets
-    instead (:func:`_doc_shingle_sets`): ``min`` over the distinct set
-    equals ``min`` over the multiset, with the corpus' repeat factor
-    fewer rows through md5 + the 64 affine aggregates.  An id on
-    several rows yields the shingles of each of its rows; grouping by
-    ``doc`` takes their union."""
+    strings.  The batch MinHash path explodes distinct shingle arrays
+    instead (per row in :func:`minhash_signatures`, per id in the LSH
+    lanes): ``min`` over the distinct set equals ``min`` over the
+    multiset, with the corpus' repeat factor fewer rows through md5 +
+    the 64 affine aggregates.  An id on several rows yields the
+    shingles of each of its rows; grouping by ``doc`` takes their
+    union."""
     nt = df.select(
         F.col(id_col).alias("doc"),
         normalized_text(F.col(text_col)).alias("__nt"),
@@ -350,56 +351,62 @@ def minhash_signatures(
     — uniformly distributed, no skew.
 
     Ids may repeat: a doc's signature is that of the union of its
-    rows' shingle sets, i.e. of its one-row-per-id exact-verify set
-    (:func:`_doc_shingle_sets`).
+    rows' shingle sets.  The explode runs over the per-ROW distinct
+    shingle arrays (:func:`_row_shingle_sets`), not the per-id union:
+    ``min`` is duplicate-insensitive, so the ``groupBy(doc)`` below
+    already unions a doc's rows, and its mins combine map-side — the
+    shuffle carries one partial row of *num_hashes* longs per
+    (partition, doc), never the shingle strings.
     """
     return _set_signatures(
-        _doc_shingle_sets(df, text_col, id_col, n), num_hashes, seed
+        _row_shingle_sets(df, text_col, id_col, n), num_hashes, seed
     )
 
 
 def _set_signatures(sets: DataFrame, num_hashes: int, seed: int) -> DataFrame:
-    """``(doc, mh0..mh{k-1})`` of one-row-per-id ``(doc, sh)`` sets.
+    """``(doc, mh0..mh{k-1})`` of ``(doc, sh)`` shingle arrays; a doc
+    on several rows gets the signature of their union.
 
-    *sets* leaves the aggregation already hash-partitioned by ``doc``,
-    so the explode and the ``groupBy(doc)`` below need no exchange of
-    their own, and each distinct shingle of a doc is hashed once.  The
-    aggregates are SQL text: built as Column trees they cost ~100 py4j
-    round trips each, as text about four.
+    Each element of ``sh`` is hashed once.  On the per-id sets of the
+    LSH lanes (:func:`_doc_shingle_sets`), which leave their
+    aggregation hash-partitioned by ``doc``, the ``groupBy(doc)`` needs
+    no exchange of its own.  The aggregates are SQL text: built as
+    Column trees they cost ~100 py4j round trips each, as text about
+    four.
     """
     aggs = [
         F.expr(f"min(({a} * h + {b}) % {MERSENNE_31}) AS mh{j}")
         for j, (a, b) in enumerate(_affine_params(num_hashes, seed))
     ]
+    # explode_OUTER, then drop the null rows it emits for empty arrays:
+    # result-identical to a plain explode (docs shorter than n still
+    # produce no signature row), but over row-local arrays a plain
+    # explode makes Catalyst infer a `size(sh) > 0 AND isnotnull(sh)`
+    # filter below the Generate, substitute sh's full defining
+    # expression into it, and push THAT below the input's exchange —
+    # re-running the normalization regex per shingle position.  No
+    # filter is inferred for an outer generate, and the explicit null
+    # filter binds to the generated attribute.
     return (
-        sets.selectExpr("doc", "explode(sh) AS s")
+        sets.selectExpr("doc", "explode_outer(sh) AS s")
+        .where("s IS NOT NULL")
         .select("doc", shingle_hash(F.col("s")).alias("h"))
         .groupBy("doc")
         .agg(*aggs)
     )
 
 
-def _doc_shingle_sets(
+def _row_shingle_sets(
     df: DataFrame, text_col: str, id_col: str, n: int = 5
 ) -> DataFrame:
-    """``(doc, sh)`` — exactly one row per document id; ``sh`` is the
-    DISTINCT union of the shingle arrays of every row carrying that id.
+    """``(doc, sh)`` — one DISTINCT shingle array per input ROW.
 
-    This is the exact-verify shingle set and the signature input, and
-    it is the set the DuckDB oracle uses (``_sql_x03_ctes``:
-    ``SELECT DISTINCT doc_id, sh``).  One row per id is what keeps the
-    verify joins from emitting a pair once per duplicate row, and from
-    pairing a repeated id under each of its texts separately (a
-    per-row Jaccard, not the union's).
-
-    Each row's distinct n-grams are built row-locally first:
+    A pure function of the row, so it needs no aggregation:
     normalization is staged once per row, the n-gram positions expand
     inside one ``transform`` over the staged column (the lambda reads a
     bound column, not the normalization subtree, so nothing is
     re-normalized per element), and ``array_distinct`` dedups in-row.
-    One ``groupBy(doc)`` — a ``collect_list`` ObjectHashAggregate and
-    its exchange — then unions an id's rows.  When ids are unique that
-    aggregation changes no set; it is the price of the id contract.
+    An id on several rows gets several arrays here.
     """
     # sequence(1, 0) in Spark counts DOWN, so texts shorter than n get
     # an explicit empty array
@@ -408,12 +415,33 @@ def _doc_shingle_sets(
         f"THEN sequence(1, length(__nt) - {n - 1}) "
         f"ELSE CAST(array() AS ARRAY<INT>) END, i -> substr(__nt, i, {n})))"
     )
+    return df.select(
+        F.col(id_col).alias("doc"),
+        normalized_text(F.col(text_col)).alias("__nt"),
+    ).selectExpr("doc", f"{sh} AS sh")
+
+
+def _doc_shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, n: int = 5
+) -> DataFrame:
+    """``(doc, sh)`` — exactly one row per document id; ``sh`` is the
+    DISTINCT union of the shingle arrays of every row carrying that id.
+
+    This is the exact-verify shingle set, and it is the set the DuckDB
+    oracle uses (``_sql_x03_ctes``: ``SELECT DISTINCT doc_id, sh``).
+    One row per id is what keeps the verify joins from emitting a pair
+    once per duplicate row, and from pairing a repeated id under each
+    of its texts separately (a per-row Jaccard, not the union's).
+
+    The row-local arrays (:func:`_row_shingle_sets`) go through one
+    ``groupBy(doc)``: a ``collect_list`` ObjectHashAggregate and its
+    exchange, which ship the shingle strings.  The LSH lanes that
+    verify the whole corpus feed these sets to the signatures too, so
+    that exchange is shared; when ids are unique the aggregation
+    changes no set — it is the price of the id contract.
+    """
     return (
-        df.select(
-            F.col(id_col).alias("doc"),
-            normalized_text(F.col(text_col)).alias("__nt"),
-        )
-        .selectExpr("doc", f"{sh} AS sh")
+        _row_shingle_sets(df, text_col, id_col, n)
         .groupBy("doc")
         .agg(F.expr("array_distinct(flatten(collect_list(sh))) AS sh"))
     )
@@ -969,11 +997,12 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return bad == 0
 
 
-def _components(
+def _star_forest(
     pairs: DataFrame, id_a: str, id_b: str, max_iterations: int = 25
 ) -> DataFrame:
-    """``(doc, component, cluster_size)`` of an undirected pair list —
-    star rounds until the first star forest, then one groupBy by root.
+    """The components of an undirected pair list as a star forest
+    ``(u, v)``: one edge from every non-minimum doc ``u`` to its
+    component's minimum id ``v``.
 
     Convergence rule: a star forest is a fixpoint of both star rounds
     (large-star re-emits each leaf→root edge, small-star each u's one
@@ -987,10 +1016,8 @@ def _components(
     checkpoint blocks in the same job (no separate count job, no
     emptiness probe).  The input pairs are read once, when the first
     round's job fills the canonical checkpoint — callers pass lazy LSH
-    plans.
-
-    The output groupBy collects each root's leaves into one row (8
-    bytes per member) and explodes them with the root.
+    plans — and the returned edges are read from the last round's
+    checkpoint.
     """
     # canonical high→low orientation up front: the star rounds rely on
     # this invariant to skip their re-orientation/dedup shuffles
@@ -1007,16 +1034,7 @@ def _components(
     for _ in range(max_iterations):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         if _is_star_forest(edges):
-            # star forest: u → root; roots appear only on the v side
-            return (
-                edges.groupBy("v")
-                .agg(F.expr("collect_list(u) AS m"))
-                .selectExpr(
-                    "explode(concat(array(v), m)) AS doc",
-                    "v AS component",
-                    "CAST(size(m) + 1 AS BIGINT) AS cluster_size",
-                )
-            )
+            return edges
     # a non-converged edge set is not a star forest; returning it
     # silently would yield wrong (doc, component) assignments
     raise RuntimeError(
@@ -1040,7 +1058,7 @@ def connected_components(
     Components in MapReduce and Beyond", 2014): converges in
     O(log²) rounds — each round is one groupBy-min plus one equi-join,
     both keyed by node id (uniform, no skew), and the loop stops at the
-    first round whose output is a star forest (see :func:`_components`).
+    first round whose output is a star forest (see :func:`_star_forest`).
     Lineage is truncated with ``localCheckpoint`` every round, the
     standard guard for iterative DataFrame algorithms (without it the
     plan doubles per iteration and the driver OOMs planning round ~20).
@@ -1052,8 +1070,10 @@ def connected_components(
     is only feasible at test scale — this implementation is the 100 TB
     path.
     """
-    return _components(pairs, id_a, id_b, max_iterations).select(
-        "doc", "component"
+    edges = _star_forest(pairs, id_a, id_b, max_iterations)
+    # star forest: u → root; roots appear only on the v side
+    return edges.selectExpr("u AS doc", "v AS component").union(
+        edges.selectExpr("v AS doc", "v AS component").distinct()
     )
 
 
@@ -1066,10 +1086,28 @@ def duplicate_clusters(
     The post-LSH step every training-data pipeline needs: pair lists
     from :func:`minhash_lsh_pairs` / :func:`simhash_near_dups` become
     disjoint clusters; the minimum id is the canonical survivor and
-    everything else is droppable.  Sizes come from the same groupBy by
-    root that lists the members — no second pass."""
-    return _components(pairs, id_a, id_b).selectExpr(
-        "doc", "component", "cluster_size", "doc = component AS is_canonical"
+    everything else is droppable.  One window over the star edges,
+    keyed by root, counts each star and picks its smallest leaf, which
+    also emits the root's row: one exchange, no join, no distinct.  A
+    window buffers its partition in a spillable row buffer, so a
+    component of millions of docs never becomes one array row."""
+    w = "OVER (PARTITION BY v)"
+    leaf = "named_struct('doc', u, 'is_canonical', false)"
+    root = "named_struct('doc', v, 'is_canonical', true)"
+    return (
+        _star_forest(pairs, id_a, id_b)
+        .selectExpr(
+            "u", "v",
+            f"count(1) {w} + 1 AS cluster_size",
+            f"u = min(u) {w} AS first_leaf",
+        )
+        .selectExpr(
+            f"inline(CASE WHEN first_leaf THEN array({leaf}, {root}) "
+            f"ELSE array({leaf}) END)",
+            "v AS component",
+            "cluster_size",
+        )
+        .select("doc", "component", "cluster_size", "is_canonical")
     )
 
 
