@@ -22,12 +22,10 @@ quadratically.  At 100 TB each arrow above is a stage boundary you can
 checkpoint to parquet; here the chain runs end-to-end in memory.
 
 Run standalone: ``python examples/pretraining_pipeline.py``
-(sf0.01 documents; override with SPARK_GRAFT_SF_DIR).  The scale tier
-(scripts/bench_scale.py) imports :func:`run_pipeline` and times the
-identical chain over the 50k-doc replicated corpus, and the
+(sf0.01 documents; override with SPARK_GRAFT_SF_DIR).  The
 ``x411_pretraining_capstone`` registry query (queries_ext19.py) runs
-it under the driver's DuckDB oracle — the composed manifest's ANSWER
-is hash-checked, not just its wall time (r8 verdict item #3).
+it under its DuckDB oracle — the composed manifest's ANSWER is
+hash-checked, not just its wall time.
 """
 
 from __future__ import annotations

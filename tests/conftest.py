@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 # spark temp inside the repo: host /tmp reapers have deleted active
-# blockmgr shuffle dirs mid-job (see scripts/bench_scale.py)
+# blockmgr shuffle dirs mid-job
 _SPARK_TMP = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".spark-tmp"
 )
