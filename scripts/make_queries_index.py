@@ -85,11 +85,8 @@ CORE_SUMMARIES = {
 
 
 def build_index() -> str:
-    # Iterate _ALL_QUERIES (fixed source/insertion order), NOT QUERIES:
-    # QUERIES is reordered by the CHECKED_WINDOW rotation, which globs
-    # untracked CORRECTNESS_r*.json at import time — indexing it would
-    # make the committed file depend on runtime driver artifacts and go
-    # stale after every driver round.
+    # Iterate _ALL_QUERIES (source order, grouped by module below);
+    # QUERIES moves the pinned SURVEY §2 queries to the front.
     from fame2pygen_spark.queries import ORACLES, _ALL_QUERIES
 
     by_module: dict[str, list[tuple[str, str]]] = {}
@@ -116,13 +113,10 @@ def build_index() -> str:
         "(`fame2pygen_spark/queries.py` aggregates all modules; every "
         "entry has a DuckDB oracle in the matching `*_ORACLES` dict).",
         "",
-        "The round driver hash-checks the FIRST 50 entries: 25 pinned "
-        "SURVEY §2 queries + 25 extension slots that rotate each round "
-        "to never-driver-checked entries (`CHECKED_WINDOW`, "
-        "`fame2pygen_spark/queries.py`).  Regenerate this file with "
-        "`python scripts/make_queries_index.py` (the rotation slice "
-        "itself is computed in queries.py per round, so it is not "
-        "embedded here).",
+        "`QUERIES` lists the 25 SURVEY §2 reference-surface queries "
+        "first (`PINNED_WINDOW`, `fame2pygen_spark/queries.py`), then "
+        "every other entry in source order.  Regenerate this file with "
+        "`python scripts/make_queries_index.py`.",
         "",
     ]
     # stable module order: core, panel, ext, ext2, ... ext13

@@ -1,21 +1,15 @@
-"""Registry-order insurance: the round driver hash-checks only the
-FIRST 50 ``queries()`` entries, so the window must contain every
-SURVEY §2 reference-surface query (pinned) plus 25 rotating extension
-slots.  The rotation (r4 verdict item #2) deterministically prefers
-registry entries with NO prior-round driver CORRECTNESS row, so the
-driver-verified union grows every round instead of re-verifying the
-same representatives.  A refactor that reshuffles dict construction
-silently demotes queries to the weaker rows-only check — this pins
-the invariant."""
+"""Registry order: ``QUERIES`` is every SURVEY §2 reference-surface
+query first (``PINNED_WINDOW``, the parity contract with the
+reference), then the rest of the registry in source order.  The order
+is a function of the source alone; a refactor that reshuffles dict
+construction, drops an entry or lets one module's query overwrite
+another's fails here."""
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
+from fame2pygen_spark import queries
 from fame2pygen_spark.queries import (
-    CHECKED_WINDOW,
+    _ALL_QUERIES,
     ORACLES,
     PINNED_WINDOW,
     QUERIES,
@@ -33,59 +27,22 @@ SECTION2 = [
     "flagship_pricing_summary",
 ]
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _prior_union() -> set[str]:
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(doc, dict):
-            seen.update(
-                k for k, v in doc.items()
-                if isinstance(v, dict) and "rows_match" in v
-            )
-    return seen
-
 
 def test_window_is_the_registry_prefix():
-    assert list(QUERIES)[: len(CHECKED_WINDOW)] == CHECKED_WINDOW
-    assert len(CHECKED_WINDOW) == 50
-
-
-def test_section2_pinned_inside_checked_window():
-    assert CHECKED_WINDOW[:25] == PINNED_WINDOW
-    missing = [n for n in SECTION2 if n not in PINNED_WINDOW]
-    assert not missing, missing
-
-
-def test_rotation_slots_prefer_unverified_queries():
-    """The 25 extension slots must be entries with no prior driver row
-    (as long as enough unverified entries remain in the registry)."""
-    prior = _prior_union()
-    rotation = CHECKED_WINDOW[25:]
-    assert len(rotation) == 25
-    never_checked = [
-        n for n in QUERIES if n not in prior and n not in PINNED_WINDOW
-    ]
-    expected_fresh = min(25, len(never_checked))
-    fresh = sum(1 for n in rotation if n not in prior)
-    assert fresh >= expected_fresh, (fresh, expected_fresh)
-
-
-def test_rotation_slots_are_oracle_backed():
-    missing = [n for n in CHECKED_WINDOW if n not in ORACLES]
-    assert not missing, missing
+    assert PINNED_WINDOW == SECTION2
+    assert list(QUERIES)[: len(PINNED_WINDOW)] == PINNED_WINDOW
+    rest = [n for n in _ALL_QUERIES if n not in PINNED_WINDOW]
+    assert list(QUERIES)[len(PINNED_WINDOW):] == rest
 
 
 def test_registry_complete_and_oracled():
-    # 101 entries through round 2; round-3 additions (x72+) append to
-    # the tail without disturbing the driver-checked first-50 window
-    assert len(QUERIES) >= 113
     assert set(QUERIES) == set(ORACLES)
-    # reorder must not drop or duplicate anything
-    assert len(set(QUERIES)) == len(QUERIES)
+    # nothing dropped by the reorder, and no name registered by two
+    # modules (a ``**`` splat would keep only the last one)
+    assert set(QUERIES) == set(_ALL_QUERIES)
+    parts = [
+        v for k, v in vars(queries).items()
+        if k.endswith("_QUERIES") and k != "_ALL_QUERIES"
+    ]
+    core = [n for n in _ALL_QUERIES if not any(n in p for p in parts)]
+    assert len(core) + sum(len(p) for p in parts) == len(QUERIES)
