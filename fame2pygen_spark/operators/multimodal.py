@@ -366,7 +366,7 @@ def encode_png_bytes(arr, *, color_type: int = 2, filter_mode: str = "cycle"):
     )
 
 
-def decode_image_bytes(payload: bytes, *, allow_fixture_vp8: bool = False):
+def decode_image_bytes(payload: bytes):
     """Decode BMP (uncompressed 24/32bpp), binary PPM (P6), PNG
     (non-interlaced 8-bit gray/RGB/palette/gray+A/RGBA — pure
     stdlib ``zlib`` + numpy unfiltering), baseline OR progressive JPEG
@@ -374,16 +374,8 @@ def decode_image_bytes(payload: bytes, *, allow_fixture_vp8: bool = False):
     restart markers, spectral selection + successive approximation —
     :func:`_decode_jpeg`, stdlib + numpy), or lossless WebP (VP8L,
     :mod:`.webp`) to an ``(h, w, 3)`` uint8 numpy array (RGB).
-    Raises ``ValueError`` on formats that need an external codec.
-
-    Lossy WebP (VP8 key frames): the :mod:`.vp8` decoder's machinery
-    is real but its probability tables are fixture-grade (see that
-    module's honesty boundary), so externally-encoded VP8 streams
-    would decode to silently wrong pixels.  The route therefore
-    raises ``ValueError`` unless ``allow_fixture_vp8=True`` (for
-    streams produced by :func:`~.vp8.encode_vp8_keyframe`, which
-    round-trip bit-exactly) or :func:`~.vp8.install_rfc_tables` has
-    substituted the real RFC 6386 constants."""
+    Raises ``ValueError`` on formats that need an external codec,
+    lossy WebP (a ``'VP8 '`` chunk) among them."""
     import struct
 
     import numpy as np
@@ -392,8 +384,6 @@ def decode_image_bytes(payload: bytes, *, allow_fixture_vp8: bool = False):
         return _decode_jpeg(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         if payload[12:16] == b"VP8 ":
-            from . import vp8
-
             if len(payload) < 20:
                 raise ValueError("truncated WebP VP8 chunk header")
             size = struct.unpack_from("<I", payload, 16)[0]
@@ -405,21 +395,11 @@ def decode_image_bytes(payload: bytes, *, allow_fixture_vp8: bool = False):
                     f"hold a frame header"
                 )
             if 20 + size > len(payload):
-                # a short slice would let BoolDecoder zero-fill past
-                # end-of-data and decode garbage — fail loudly instead
                 raise ValueError(
                     f"truncated WebP VP8 chunk body: header declares "
                     f"{size} bytes, payload carries {len(payload) - 20}"
                 )
-            if vp8.TABLES_ARE_FIXTURE and not allow_fixture_vp8:
-                raise ValueError(
-                    "lossy WebP (VP8) decode runs on fixture-grade "
-                    "probability tables — external streams would decode "
-                    "to wrong pixels; pass allow_fixture_vp8=True for "
-                    "encode_vp8_keyframe round-trips or call "
-                    "vp8.install_rfc_tables() for real interop"
-                )
-            return vp8.decode_vp8_rgb(payload[20 : 20 + size])
+            raise ValueError("lossy WebP (VP8) needs an external codec")
         from .webp import decode_webp_lossless
 
         return decode_webp_lossless(payload)[:, :, :3]
@@ -1609,17 +1589,12 @@ def image_features(
     id_col: str = "asset_id",
     payload_col: str = "payload",
     thumb: tuple[int, int] = (8, 8),
-    allow_fixture_vp8: bool = False,
 ) -> DataFrame:
     """Decode + feature-extract + thumbnail over binary image payloads
     via ``mapInPandas`` — REAL for BMP/PPM; compressed formats yield a
     ``decoded='needs-codec'`` row instead of failing the batch, so one
-    JPEG in a 100 TB corpus cannot poison a partition.
-    ``allow_fixture_vp8`` opts lossy-WebP payloads into the fixture
-    decode lane (see :func:`decode_image_bytes`); closure-captured so
-    it reaches every Arrow worker."""
+    JPEG in a 100 TB corpus cannot poison a partition."""
     th, tw = int(thumb[1]), int(thumb[0])
-    fixture_vp8 = bool(allow_fixture_vp8)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1627,10 +1602,7 @@ def image_features(
             for aid, p in zip(pdf[id_col], pdf[payload_col]):
                 out["asset_id"].append(int(aid))
                 try:
-                    arr = decode_image_bytes(
-                        bytes(p) if p is not None else b"",
-                        allow_fixture_vp8=fixture_vp8,
-                    )
+                    arr = decode_image_bytes(bytes(p) if p is not None else b"")
                     small = resize_image(arr, th, tw)
                     means = arr.reshape(-1, arr.shape[2]).mean(axis=0)
                     out["width"].append(int(arr.shape[1]))
@@ -1705,26 +1677,20 @@ def audio_features(
 
 def decode_image(payload: Column) -> Column:  # pragma: no cover - stub
     """Column-level image decode for formats needing an external codec
-    (ANIMATED WebP — ANIM/ANMF frame compositing — and VP8
-    interframes, plus external lossy-VP8 streams until real RFC 6386
-    tables are installed).  BMP/PPM/PNG, baseline + progressive JPEG,
-    lossless WebP (VP8L) and STILL extended WebP (VP8X wrapping VP8L —
-    metadata chunks are skipped, r10) decode for real; VP8X containers
-    also parse scan-time via :func:`vp8x_info` with zero decode.  VP8
-    key frames decode in the *fixture lane* only (:mod:`.vp8` honesty
-    boundary — ``encode_vp8_keyframe`` round-trips bit-exactly,
-    external streams raise unless ``install_rfc_tables()`` has run) —
-    use :func:`image_features` / :func:`image_ahash` (Arrow-batched
+    (lossy WebP — VP8 key frames and interframes — and ffmpeg-class
+    video).  BMP/PPM/PNG, baseline + progressive JPEG, lossless WebP
+    (VP8L) and STILL extended WebP (VP8X wrapping VP8L — metadata
+    chunks are skipped) decode for real; VP8X containers also parse
+    scan-time via :func:`vp8x_info` with zero decode — use
+    :func:`image_features` / :func:`image_ahash` (Arrow-batched
     ``mapInPandas`` over :func:`decode_image_bytes`)."""
     raise NotImplementedError(
-        "only VP8 interframes (and ffmpeg-class video) need a video "
+        "lossy WebP (VP8) and ffmpeg-class video need an external "
         "codec; BMP/PPM/PNG/JPEG baseline+progressive/VP8L/still-VP8X "
         "decode for real via image_features(), animated lossless WebP "
         "decodes FULLY COMPOSITED via webp_composited_features() "
         "(offsets, alpha-over/overwrite blending, background "
-        "disposal) or per-frame via webp_frame_features(), VP8 key "
-        "frames decode in the fixture lane (opt-in allow_fixture_vp8, "
-        "vp8.install_rfc_tables() for external interop), and VP8X "
+        "disposal) or per-frame via webp_frame_features(), and VP8X "
         "metadata parses scan-time via vp8x_info()"
     )
 
@@ -1764,10 +1730,7 @@ AHASH_SCHEMA = StructType(
 )
 
 
-def image_ahash(
-    df: DataFrame, id_col: str, payload_col: str,
-    *, allow_fixture_vp8: bool = False,
-) -> DataFrame:
+def image_ahash(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """Perceptual average-hash of REAL image payloads: decode
     (BMP/PPM, :func:`decode_image_bytes`), nearest-neighbor thumbnail
     to 8×8, grayscale by integer channel mean, then the integer-
@@ -1778,10 +1741,7 @@ def image_ahash(
     compare 16-bit bands, verify with ``bit_count(xor)``) mark
     visually-identical thumbnails; the banding shape is the SimHash
     pipeline (dedup.py) applied to pixels instead of tokens.
-    ``allow_fixture_vp8`` opts lossy-WebP payloads into the fixture
-    decode lane (see :func:`decode_image_bytes`).
     """
-    fixture_vp8 = bool(allow_fixture_vp8)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1791,9 +1751,7 @@ def image_ahash(
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 out["doc_id"].append(doc_id)
                 try:
-                    arr = decode_image_bytes(
-                        bytes(payload), allow_fixture_vp8=fixture_vp8
-                    )
+                    arr = decode_image_bytes(bytes(payload))
                 except ValueError:
                     out["h"].append(None)
                     out["w"].append(None)
@@ -2639,7 +2597,6 @@ def webp_frame_features(
     payload_col: str,
     *,
     every_k: int = 1,
-    allow_fixture_vp8: bool = False,
 ) -> DataFrame:
     """Per-frame features of WebP payloads — animated OR still — via
     Arrow-batched ``mapInPandas``: frames split at the CONTAINER level
@@ -2653,7 +2610,6 @@ def webp_frame_features(
     Undecodable frames yield a ``decoded='needs-codec'`` row instead
     of failing the batch."""
     k = max(1, int(every_k))
-    fixture_vp8 = bool(allow_fixture_vp8)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .webp import extract_webp_frames
@@ -2677,9 +2633,7 @@ def webp_frame_features(
                     if idx % k:
                         continue
                     try:
-                        arr = decode_image_bytes(
-                            fr["still"], allow_fixture_vp8=fixture_vp8
-                        )
+                        arr = decode_image_bytes(fr["still"])
                         _append_frame_row(
                             out, doc_id, idx, fr["x"], fr["y"],
                             fr["duration_ms"], int(arr.shape[1]),

@@ -446,10 +446,7 @@ def decode_webp_lossless(payload: bytes):
             vp8l = body
             break
         if tag == b"VP8 ":
-            raise ValueError(
-                "lossy WebP: decode the 'VP8 ' chunk via operators.vp8 "
-                "(multimodal.decode_image_bytes routes it there)"
-            )
+            raise ValueError("lossy WebP (VP8) needs an external codec")
         if tag == b"VP8X":
             # extended container: a STILL image (animation flag clear)
             # is just metadata chunks around a VP8L payload — keep

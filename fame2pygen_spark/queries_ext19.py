@@ -532,88 +532,6 @@ EXT19_QUERIES.update({"x414_tpch_q21": q_x414_tpch_q21})
 EXT19_ORACLES.update({"x414_tpch_q21": SQL_X414})
 
 
-# --------------------- x415: lossy-WebP (VP8 key frame) decode → ahash
-
-
-def q_x415_vp8_ahash(spark, sf_dir):
-    """REAL VP8 key-frame decode end to end (operators/vp8.py →
-    decode_image_bytes → image_ahash): the x334 construction carried
-    as genuine lossy-WebP streams — each document's 8×8 fingerprint
-    expanded to a 64×64 luma frame of flat 4×4 blocks and encoded
-    through the full VP8 intra path (boolean arithmetic coder, frame +
-    MB headers, B_PRED/B_DC subblock modes, token tree with CAT extra
-    bits, dequant, DC-only iDCT), with ``doc_id`` rotating the header
-    surface: 1/2/4/8 token partitions, skip coding on/off, every
-    quantizer index 0-15 (the internal y_dc_delta re-centres the DC
-    step at 4, keeping reconstruction BIT-EXACT: DC level 2r → 8r →
-    (8r+4)>>3 = r), chroma quantizer deltas, and every fifth doc
-    transmitting explicit token-probability updates.  Exactness makes
-    the oracle arithmetic (x334's, verbatim): a hash match proves the
-    entire decode chain is lossless for every variant.  Loop-filtered
-    and non-DC-mode streams are covered by the pytest suite (shared
-    reconstruction semantics — see the vp8 module's honesty
-    boundary)."""
-    from .operators.multimodal import image_ahash
-    from .operators.vp8 import encode_vp8_keyframe, wrap_webp_vp8
-    from .queries_ext2 import _ahash_pixel_counts_spark
-    from .queries_ext18 import _PROG_PAYLOAD_SCHEMA
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    nt = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    staged = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.array(*_ahash_pixel_counts_spark(nt)).alias("px"),
-    )
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, px in zip(pdf["doc_id"], pdf["px"]):
-                d = int(doc_id)
-                g = np.asarray(list(px), dtype=np.uint8).reshape(8, 8)
-                img = g.repeat(8, 0).repeat(8, 1)
-                kw = {
-                    "n_partitions": (1, 2, 4, 8)[d % 4],
-                    "use_skip": d % 2 == 0,
-                    "y_ac_qi": d % 16,
-                    "uv_dc_delta": (d % 7) - 3,
-                    "uv_ac_delta": (d % 5) - 2,
-                }
-                if d % 5 == 0:
-                    kw["update_probs"] = (
-                        (0, 0, 0, 3, 90 + d % 100),
-                        (2, 1, 2, 5, 1 + d % 254),
-                    )
-                payloads.append(
-                    wrap_webp_vp8(encode_vp8_keyframe(img.tolist(), **kw))
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"),
-                 "payload": payloads}
-            )
-
-    with_vp8 = staged.mapInPandas(encode, schema=_PROG_PAYLOAD_SCHEMA)
-    # fixture-lane opt-in: these streams come from encode_vp8_keyframe,
-    # the one provenance that round-trips bit-exactly under the
-    # fixture-grade probability tables (vp8.py honesty boundary)
-    return image_ahash(with_vp8, "doc_id", "payload", allow_fixture_vp8=True)
-
-
-def _sql_x415() -> str:
-    # the decode is bit-exact, so x334's arithmetic oracle (hash as a
-    # pure function of the 64 fingerprint bytes at 64×64) is verbatim
-    from .queries_ext16 import _sql_x334
-
-    return _sql_x334()
-
-
-EXT19_QUERIES.update({"x415_vp8_ahash": q_x415_vp8_ahash})
-EXT19_ORACLES.update({"x415_vp8_ahash": _sql_x415()})
-
-
 # -------------- x416: TPC-H Q4 shape (EXISTS semi-join, ordered agg)
 
 

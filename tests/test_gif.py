@@ -1,5 +1,5 @@
 """GIF codec tests — round-trips against the module's own encoder
-(the webp/vp8 testing discipline) plus hand-computed compositing.
+(the webp testing discipline) plus hand-computed compositing.
 """
 
 from __future__ import annotations

@@ -1922,15 +1922,6 @@ def test_webp_ahash_is_arrow_batched_decode(spark):
     assert "Window" not in plan
 
 
-def test_vp8_ahash_is_arrow_batched_decode(spark):
-    # full lossy-WebP keyframe encode+decode rides the document scan
-    # in Arrow batches — no join, no window, no per-row Python
-    plan = plan_of(spark, "x415_vp8_ahash")
-    assert "MapInPandas" in plan
-    assert "Join" not in plan
-    assert "Window" not in plan
-
-
 def test_repeated_spans_pair_join_is_fingerprint_keyed(spark):
     # frequency-capped equi-join on the shingle fingerprint; the
     # islands window is (pair, diagonal)-keyed; nothing cartesian

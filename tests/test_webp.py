@@ -77,6 +77,23 @@ def test_webp_color_transform_and_meta_prefix():
     )
 
 
+def _vp8_keyframe_stream(w, h):
+    """A RIFF/WEBP container around a VP8 key-frame header (RFC 6386
+    §9.1: frame tag with show_frame set, start code, 14-bit dims)
+    followed by a few zero bytes standing in for the partitions."""
+    import struct
+
+    tag = (1 << 4) | (4 << 5)  # key frame, version 0, shown, 4-byte part
+    body = (
+        struct.pack("<I", tag)[:3] + b"\x9d\x01\x2a"
+        + struct.pack("<HH", w, h) + b"\x00" * 4
+    )
+    return (
+        b"RIFF" + struct.pack("<I", 12 + len(body)) + b"WEBP"
+        + b"VP8 " + struct.pack("<I", len(body)) + body
+    )
+
+
 def test_webp_dispatches_through_decode_image_bytes():
     from fame2pygen_spark.operators.multimodal import decode_image_bytes
 
@@ -85,63 +102,16 @@ def test_webp_dispatches_through_decode_image_bytes():
     rgb = decode_image_bytes(encode_webp_lossless(img))
     assert rgb.shape == (6, 9, 3)
     assert (rgb == img[:, :, :3]).all()
-    # lossy VP8 key frames decode in the FIXTURE LANE only (r10 gate):
-    # a garbage VP8 chunk raises cleanly into the needs-codec lane
+    # lossy VP8 needs an external codec: a garbage chunk raises as
+    # truncated, a well-formed key-frame header lands in the
+    # needs-codec lane, and a short body still fails as truncated
     with pytest.raises(ValueError, match="truncated"):
         decode_image_bytes(b"RIFF\x10\x00\x00\x00WEBPVP8 \x00\x00\x00\x00")
-    from fame2pygen_spark.operators.vp8 import (
-        encode_vp8_keyframe, wrap_webp_vp8,
-    )
-
-    gray = np.full((16, 16), 99, dtype=np.uint8)
-    stream = wrap_webp_vp8(encode_vp8_keyframe(gray.tolist()))
-    # default: external-looking VP8 refuses to decode under fixture
-    # probability tables (silent corruption guard, ADVICE r9)
-    with pytest.raises(ValueError, match="fixture-grade"):
+    stream = _vp8_keyframe_stream(16, 16)
+    with pytest.raises(ValueError, match="needs an external codec"):
         decode_image_bytes(stream)
-    rgb = decode_image_bytes(stream, allow_fixture_vp8=True)
-    assert rgb.shape == (16, 16, 3)
-    assert (rgb[:, :, 0] == gray).all()
-    # a chunk whose header declares more bytes than the payload holds
-    # must fail loudly, not zero-fill into garbage pixels
     with pytest.raises(ValueError, match="chunk body"):
-        decode_image_bytes(stream[:-8], allow_fixture_vp8=True)
-
-
-def test_vp8_install_rfc_tables_gate():
-    """install_rfc_tables validates shapes and flips the fixture flag;
-    the decode gate opens once real tables are installed."""
-    import numpy as np
-
-    from fame2pygen_spark.operators import vp8
-    from fame2pygen_spark.operators.multimodal import decode_image_bytes
-
-    assert vp8.TABLES_ARE_FIXTURE is True
-    with pytest.raises(ValueError, match="axis length"):
-        vp8.install_rfc_tables([[1]], [[1]], [[1]])
-    bad = [[[[0] * 11 for _ in range(3)] for _ in range(8)]
-           for _ in range(4)]
-    good = [[[[7] * 11 for _ in range(3)] for _ in range(8)]
-            for _ in range(4)]
-    bmode = [[[9] * 9 for _ in range(10)] for _ in range(10)]
-    with pytest.raises(ValueError, match="not in"):
-        vp8.install_rfc_tables(bad, good, bmode)
-    assert vp8.TABLES_ARE_FIXTURE is True  # failed installs don't flip
-    old = {k: vp8.SPEC_TABLES[k] for k in vp8.SPEC_TABLES}
-    try:
-        vp8.install_rfc_tables(good, good, bmode)
-        assert vp8.TABLES_ARE_FIXTURE is False
-        gray = np.full((16, 16), 50, dtype=np.uint8)
-        stream = vp8.wrap_webp_vp8(
-            vp8.encode_vp8_keyframe(gray.tolist())
-        )
-        # gate open: decodes without the opt-in flag, still bit-exact
-        # (encoder and decoder share whatever tables are installed)
-        rgb = decode_image_bytes(stream)
-        assert (rgb[:, :, 0] == gray).all()
-    finally:
-        vp8.SPEC_TABLES.update(old)
-        vp8.TABLES_ARE_FIXTURE = True
+        decode_image_bytes(stream[:-8])
 
 
 def test_webp_distance_map_has_120_entries():
