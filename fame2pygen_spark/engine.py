@@ -176,39 +176,6 @@ class FameEngine:
         return self.execute(df, plan)
 
     def execute(self, df: DataFrame, plan: Plan) -> FameResult:
-        # Multi-consumer scripts read the input frame through several
-        # independent subplans: every convert derives its aggregation
-        # from the pre-bridge frame AND joins back onto it, and
-        # chain/fishvol each run a yearly groupBy plus a join-back.
-        # Those subtrees aggregate differently right at the source, so
-        # adaptive stage reuse cannot unify them and each one re-runs
-        # the whole upstream derivation (measured: s14_convert_down
-        # scanned its base 4x, p02_panel_convert 9x).
-        #
-        # Whether to materialize the input once is SCALE-DEPENDENT, so
-        # it is a conf, defaulting to lazy.  Measured at sf0.1
-        # (local[32], interleaved, idle): an eager localCheckpoint
-        # LOSES ~25% on the convert/chain family (4.70 s -> 5.85 s
-        # across s12/s13/s14x2/p02) — the duplicated scans re-read a
-        # tiny aggregate in parallel for less than the cost of a
-        # blocking materialization job.  On a 100 TB input the same
-        # duplication re-scans the raw fact table once per consumer,
-        # while the materialized panel is aggregate-bounded (rows =
-        # entities x periods) — there the conf should be on; see
-        # OPTIMIZATION_r10.md / DEPLOYMENT.md.
-        multi_consumer = bool(plan.convert_groups) or any(
-            isinstance(pa.stmt, (ChainStmt, FishvolStmt))
-            for stage in plan.schedule
-            for pa in stage
-        )
-        if multi_consumer and (
-            df.sparkSession.conf.get(
-                "spark.fame2pygen.engine.materializeBase", "false"
-            ).lower()
-            == "true"
-        ):
-            df = df.localCheckpoint(eager=True)
-
         frame = _LiveFrame(df, self.date_col)
         low = Lowering(self.date_col, self.entity_cols,
                        renames=plan.convert_renames, columns=frame.columns)

@@ -370,45 +370,6 @@ def test_fame_date_formats(text, expected):
     assert parse_fame_date(text) == expected
 
 
-def test_materialize_base_conf_flips_plan_not_results(spark):
-    """`spark.fame2pygen.engine.materializeBase` (scale knob, default
-    lazy): ON must truncate the multi-consumer input lineage to one
-    materialized scan (ExistingRDD in the plan) without changing any
-    value; OFF must leave the plan fully lazy (no RDD scan)."""
-    df = spark.createDataFrame(
-        [
-            (dt.date(2020, 1, 1), 10.0, 20.0),
-            (dt.date(2020, 2, 1), 30.0, 40.0),
-            (dt.date(2020, 4, 1), 50.0, 60.0),
-        ],
-        "DATE date, A double, B double",
-    )
-    script = ["freq m", "qa = convert(a, q, disc, sum)", "s = a + b"]
-
-    def formatted(res):
-        jdf = res.df._jdf
-        return res.df._sc._jvm.PythonSQLUtils.explainString(
-            jdf.queryExecution(), "formatted"
-        )
-
-    res_lazy = run_script(df, script)
-    assert "localCheckpoint" not in formatted(res_lazy)
-
-    spark.conf.set("spark.fame2pygen.engine.materializeBase", "true")
-    try:
-        res_mat = run_script(df, script)
-        assert "localCheckpoint" in formatted(res_mat)
-    finally:
-        spark.conf.unset("spark.fame2pygen.engine.materializeBase")
-
-    def key(r):
-        return (r["DATE"],)
-
-    lazy_rows = sorted(res_lazy.df.collect(), key=key)
-    mat_rows = sorted(res_mat.df.collect(), key=key)
-    assert [tuple(r) for r in lazy_rows] == [tuple(r) for r in mat_rows]
-
-
 # ------------------------------------------------ lowering to Spark SQL
 
 
