@@ -35,6 +35,27 @@ def test_window_is_the_registry_prefix():
     assert list(QUERIES)[len(PINNED_WINDOW):] == rest
 
 
+def test_section2_pinned_inside_checked_window():
+    """Every SURVEY §2 query sits in the pinned head, so a check that
+    reads only the first ``len(PINNED_WINDOW)`` entries sees them all."""
+    missing = [n for n in SECTION2 if n not in PINNED_WINDOW]
+    assert not missing, missing
+    head = list(QUERIES)[: len(PINNED_WINDOW)]
+    assert [n for n in SECTION2 if n not in head] == []
+
+
+def test_rotation_slots_are_oracle_backed():
+    """The 25 entries after the pinned head (source order now) and the
+    head itself each carry a non-empty oracle SQL string."""
+    window = list(QUERIES)[: 2 * len(PINNED_WINDOW)]
+    assert len(window) == 50
+    missing = [
+        n for n in window
+        if not (isinstance(ORACLES.get(n), str) and ORACLES[n].strip())
+    ]
+    assert not missing, missing
+
+
 def test_registry_complete_and_oracled():
     assert set(QUERIES) == set(ORACLES)
     # nothing dropped by the reorder, and no name registered by two
