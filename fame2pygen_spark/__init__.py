@@ -17,7 +17,7 @@ Public API::
         "flag = if growth gt 5 then 1 else 0",
     ])
     result.df          # transformed wide DataFrame
-    result.scalars     # driver-side scalar values
+    result.scalars     # scalar values, read with one Spark job on first access
     result.local_databases
 """
 

@@ -22,9 +22,10 @@ auditable, version-controllable generated code.
 It has no walk of its own.  ``generate_test_script`` runs the engine's
 plan walk (``FameEngine.walk``) against ``_PrintFrame``, which prints
 each step as a line of ``ts_transformer`` where the engine's live frame
-applies it to a DataFrame.  Scalars and the inferred convert frequency
-become variables of the generated module; scalars are spliced into the
-SQL text when it runs.
+applies it to a DataFrame.  Scalars are hidden columns of the frame,
+as in the engine, dropped before ``ts_transformer`` returns; the
+inferred convert frequency and an nlrx lambda read from a scalar or a
+series are variables of the generated module.
 
 Differences from the reference's generated-code shape (deliberate):
 
@@ -68,12 +69,6 @@ _ARG_IMPORTS = {
 }
 
 
-def _scalar_var(name: str) -> str:
-    return "s_" + "".join(
-        ch if ch.isalnum() else "_" for ch in name.lower()
-    )
-
-
 def _hole(py_expr: str) -> str:
     return f"{_HOLE}{py_expr}{_HOLE}"
 
@@ -88,9 +83,9 @@ def _py(sql: str) -> str:
 
 
 class _SourceLowering(Lowering):
-    """The engine's lowering for generated code: scalars are variables
-    of the generated module, and whether a target already has prior
-    values is decided when it runs — input columns are unknown here."""
+    """The engine's lowering for generated code: whether a target already
+    has prior values is decided when it runs — input columns are unknown
+    here."""
 
     def prior(self, col: str) -> str:
         return _hole(f"{ident(col)!r} if {col!r} in df.columns else 'NULL'")
@@ -106,7 +101,8 @@ class _Var(str):
 class _PrintFrame:
     """The engine's walk frame for generated code: each step is printed
     as a line of ``ts_transformer`` instead of applied to a DataFrame;
-    probes and operator calls return the module variable they assign."""
+    the nlrx lambda probe and operator calls return the module variable
+    they assign."""
 
     #: the input's columns are known only when the generated module runs
     columns = None
@@ -152,22 +148,12 @@ class _PrintFrame:
     def join(self, other: _Var, on: list[str], added: list[str]) -> None:
         self._add(f'df = df.join({other}, on={on!r}, how="full")')
 
-    def first(self, text: str, *, out: str, temps=None,
-              where: str | None = None) -> _Var:
-        probe = "df"
-        if temps:
-            self._with_columns("_probe", temps)
-            probe = "_probe"
-        probe += (f".where({_py(where)})" if where
-                  else f".orderBy({self.date_col!r})")
-        var = _scalar_var(out)
-        self._add(f'_row = {probe}.select(F.expr({_py(text)}).alias("v")).first()')
+    def first(self, text: str, *, out: str) -> _Var:
+        var = "s_" + "".join(ch if ch.isalnum() else "_" for ch in out.lower())
+        self._add(f"_row = df.orderBy({self.date_col!r})"
+                  f'.select(F.expr({_py(text)}).alias("v")).first()')
         self._add(f'{var} = _row["v"] if _row else None')
         return _Var(var)
-
-    def literal(self, value: _Var) -> str:
-        self.imports.add("from fame2pygen_spark.lowering import sql_literal")
-        return _hole(f"sql_literal({value})")
 
 
 _HEADER = '''"""Generated by fame2pygen_spark.codegen — do not edit.

@@ -14,13 +14,13 @@ One walk, two frames
 ``FameEngine.walk`` is the package's only walk of a ``Plan``: it
 decides step order, same-target batch flushes, convert frequencies and
 grouping, fishvol list-alias expansion, date-window scoping of
-operator output, scalar probes, nlrx lambdas and point-in-time
+operator output, scalar columns, nlrx lambdas and point-in-time
 upserts.  It drives a *frame* through a few primitives (``withColumns``
 of SQL text, drop-if-present, calls into the frame-level operators, a
-full join on keys, a scalar probe).  ``execute`` walks ``_LiveFrame``,
-which applies each step to the DataFrame; ``codegen`` walks a frame
-that prints each step as a line of the generated module, so the module
-replays exactly what the engine runs.
+full join on keys, the probe of an nlrx lambda).  ``execute`` walks
+``_LiveFrame``, which applies each step to the DataFrame; ``codegen``
+walks a frame that prints each step as a line of the generated module,
+so the module replays exactly what the engine runs.
 
 Execution order (mirrors the reference, ``fame2py_converter.py:303-766``):
 
@@ -31,10 +31,17 @@ Execution order (mirrors the reference, ``fame2py_converter.py:303-766``):
 3. dependency levels — each level's expressions lowered to Spark SQL
    text (``lowering.py``) and applied as one ``withColumns`` of
    ``F.expr`` columns, after one ``withColumns`` of any staged
-   temporaries; scalars are eager ``.first()`` probes inlined as typed
-   literals into later levels
-4. point-in-time upserts, grouped per target (``:700-745``)
+   temporaries; a scalar is a hidden ``__scalar_<name>`` column of its
+   level, one value over the whole series, that later levels read
+4. point-in-time upserts, grouped per target (``:700-745``); then the
+   scalar columns are dropped
 5. local-database extraction (``:747-761``, ``execute`` only)
+
+``execute`` starts no Spark job unless an nlrx lambda names a scalar or
+a series, or a convert has to infer its source frequency.
+``FameResult.scalars`` reads every scalar's value with one job, on first
+access.  Each of these actions runs under a ``spark.job.description``
+naming it; the caller's description is restored after.
 
 The frame's columns are tracked in Python: ``df.columns`` is read once
 at the start and once after each call into a frame-level operator
@@ -52,6 +59,10 @@ Documented divergences from the reference (each is deliberate):
   preserves script-assigned columns and silently nulls input columns.
 * Scalars referencing plain (non-aggregate) series take the value from
   the first row by DATE; the reference's ``.item()`` would raise.
+* Under ``entity_cols`` a scalar has one value per entity, computed over
+  that entity's own series (as ``firstvalue`` and ``ser[date]`` inside an
+  expression already are); ``FameResult.scalars`` reports the first
+  entity in entity-column order.
 
 Scale posture: pass ``entity_cols`` to run the same script over millions
 of independent series in long format — every window and groupBy gains a
@@ -61,13 +72,16 @@ default (reference parity) is one global series.
 
 from __future__ import annotations
 
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import date as _date
+from functools import cached_property
 
 from pyspark.sql import DataFrame, functions as F
 
-from .lowering import Lowering, ident, sql_literal
-from .parser.expressions import DynLookup, quoted
+from .lowering import Lowering, ident
+from .parser.expressions import quoted
 from .parser.grammar import (
     FREQ_INFO, ChainStmt, FameScriptError, FishvolStmt, NlrxStmt,
     ScalarAssignStmt, SeriesAssignStmt, column_name, normalize_frequency,
@@ -80,10 +94,61 @@ from .plans.planner import Plan, PlannedAssign, build_plan
 DEFAULT_BACKCAST_WINDOW = (_date(2016, 12, 31), _date(1981, 3, 31))
 
 
+@contextmanager
+def _job_description(df: DataFrame, text: str):
+    """Run the enclosed Spark actions under ``spark.job.description``
+    *text*; the caller's description is restored after."""
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
+
+
+def _scalar_column(name: str) -> str:
+    """The hidden column that holds scalar *name* during the walk."""
+    return f"__scalar_{name.lower()}"
+
+
+class _Scalars(Mapping):
+    """``FameResult.scalars``: lower-case name -> value, read from the
+    scalars' columns of *df* with one Spark job on first access.  Every
+    row of an entity holds its scalars; this reports the first entity's."""
+
+    def __init__(self, df: DataFrame, columns: dict[str, str],
+                 entity_cols: tuple[str, ...]):
+        self._df, self._columns, self._entity_cols = df, columns, entity_cols
+
+    @cached_property
+    def _values(self) -> dict[str, object]:
+        if not self._columns:
+            return {}
+        df = self._df
+        if self._entity_cols:
+            df = df.orderBy(*self._entity_cols)
+        with _job_description(df, "FAME scalars"):
+            cols = map(ident, self._columns.values())
+            rows = df.selectExpr(*cols).limit(1).collect()
+        if not rows:
+            return dict.fromkeys(self._columns)
+        return dict(zip(self._columns, rows[0]))
+
+    def __getitem__(self, name: str) -> object:
+        return self._values[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._columns)
+
+    def __len__(self) -> int:
+        return len(self._columns)
+
+
 @dataclass
 class FameResult:
     df: DataFrame
-    scalars: dict[str, object] = field(default_factory=dict)
+    scalars: Mapping[str, object] = field(default_factory=dict)
     local_databases: dict[str, DataFrame] = field(default_factory=dict)
     renames: dict[str, str] = field(default_factory=dict)
 
@@ -116,9 +181,11 @@ class _LiveFrame:
                 del self.columns[c.lower()]
 
     def call(self, fn, *args, out: str, **kwargs):
-        """``fn(*args, **kwargs)``; *out* names the result where the walk
-        is printed instead."""
-        return fn(*args, **kwargs)
+        """``fn(*args, **kwargs)``, under a job description naming *fn*
+        (``infer_frequency`` runs a job); *out* names the result where
+        the walk is printed instead."""
+        with _job_description(self.df, f"FAME {fn.__name__}"):
+            return fn(*args, **kwargs)
 
     def apply(self, fn, *args, **kwargs) -> None:
         """``df = fn(df, *args, **kwargs)`` for a frame-level operator."""
@@ -132,17 +199,23 @@ class _LiveFrame:
         self.df = self.df.join(other, on=on, how="full")
         self.columns.update((c.lower(), c) for c in added)
 
-    def first(self, text: str, *, out: str, temps=None, where: str | None = None):
-        """The value of *text* on the first row by date, or on the rows
-        *where* holds."""
-        probe = (self.df.withColumns({n: F.expr(t) for n, t in temps.items()})
-                 if temps else self.df)
-        probe = probe.where(where) if where else probe.orderBy(self.date_col)
-        row = probe.select(F.expr(text).alias("v")).first()
+    def first(self, text: str, *, out: str):
+        """The value of the aggregate *text* over the frame in date
+        order, for the nlrx lambda *out*."""
+        with _job_description(self.df, f"FAME nlrx lambda {out}"):
+            row = (self.df.orderBy(self.date_col)
+                   .select(F.expr(text).alias("v")).first())
         return row["v"] if row else None
 
-    def literal(self, value) -> str:
-        return sql_literal(value)
+
+def _scalar_text(stmt: ScalarAssignStmt, low: Lowering) -> str:
+    """SQL text of a scalar's column: the expression where it already has
+    one value over the whole series, else its value on the first date."""
+    low.line = stmt.line
+    text, windowed = low.expr(stmt.expr)
+    if low.uniform(stmt.expr):
+        return text
+    return f"first({low.unwindowed(text, windowed)}) OVER ({low.full})"
 
 
 def _apply(frame, low: Lowering, updates: dict[str, str]) -> None:
@@ -179,24 +252,28 @@ class FameEngine:
         frame = _LiveFrame(df, self.date_col)
         low = Lowering(self.date_col, self.entity_cols,
                        renames=plan.convert_renames, columns=frame.columns)
-        scalars = self.walk(frame, plan, low)
+        held, scalars = self.walk(frame, plan, low)
         local_dbs = self._extract_local_dbs(frame.df, plan, low)
-        return FameResult(frame.df, scalars, local_dbs,
-                          dict(plan.convert_renames))
+        return FameResult(frame.df, _Scalars(held, scalars, self.entity_cols),
+                          local_dbs, dict(plan.convert_renames))
 
-    def walk(self, frame, plan: Plan, low: Lowering) -> dict[str, object]:
-        """Run *plan* step by step against *frame*, lowering with *low*;
-        returns the scalars, lower-case name -> whatever the frame's
-        probe gave."""
-        scalars: dict[str, object] = {}
+    def walk(self, frame, plan: Plan, low: Lowering):
+        """Run *plan* step by step against *frame*, lowering with *low*.
+        Each scalar is a hidden column until the end; returns the frame's
+        ``df`` from just before those columns are dropped, and the
+        scalars' columns, lower-case name -> column."""
         if plan.backcasts:
             self._run_backcasts(frame, plan)
         if plan.convert_groups:
             self._run_convert_bridge(frame, plan)
         for stage in plan.schedule:
-            self._run_stage(frame, stage, plan, scalars, low)
+            self._run_stage(frame, stage, plan, low)
         self._run_point_in_time(frame, plan, low)
-        return scalars
+        held = frame.df
+        scalars = {name: _scalar_column(name) for name in low.scalars}
+        if scalars:
+            frame.drop(list(scalars.values()))
+        return held, scalars
 
     # ------------------------------------------------------------- stages
 
@@ -285,56 +362,40 @@ class FameEngine:
         frame,
         stage: list[PlannedAssign],
         plan: Plan,
-        scalars: dict[str, object],
         low: Lowering,
     ) -> None:
         batch: dict[str, str] = {}
         for pa in stage:
             stmt = pa.stmt
-            if isinstance(stmt, SeriesAssignStmt):
-                if pa.column in batch:  # same target reassigned → sequential
+            if isinstance(stmt, SeriesAssignStmt | ScalarAssignStmt):
+                scalar = isinstance(stmt, ScalarAssignStmt)
+                column = _scalar_column(stmt.target) if scalar else pa.column
+                if column in batch:  # same target reassigned → sequential
                     _apply(frame, low, batch)
                     batch = {}
-                text = low.lower(stmt.expr, stmt.line)
-                if pa.date_filter is not None:
-                    text = low.scoped(text, pa.date_filter, pa.column)
-                batch[pa.column] = text
+                if scalar:
+                    batch[column] = _scalar_text(stmt, low)
+                    low.scalars[stmt.target.lower()] = ident(column)
+                else:
+                    text = low.lower(stmt.expr, stmt.line)
+                    if pa.date_filter is not None:
+                        text = low.scoped(text, pa.date_filter, column)
+                    batch[column] = text
                 continue
 
             if batch:
                 _apply(frame, low, batch)
                 batch = {}
-            if isinstance(stmt, ScalarAssignStmt):
-                key = stmt.target.lower()
-                scalars[key] = self._eval_scalar(frame, stmt, low)
-                low.scalars[key] = frame.literal(scalars[key])
-            elif isinstance(stmt, ChainStmt):
+            if isinstance(stmt, ChainStmt):
                 self._run_chain(frame, pa, low)
             elif isinstance(stmt, FishvolStmt):
                 self._run_fishvol(frame, pa, plan, low)
             elif isinstance(stmt, NlrxStmt):
-                self._run_nlrx(frame, pa, scalars, low)
+                self._run_nlrx(frame, pa, low)
             else:  # pragma: no cover
                 raise ValueError(f"unexpected statement in stage: {stmt}")
         if batch:
             _apply(frame, low, batch)
-
-    def _eval_scalar(self, frame, stmt: ScalarAssignStmt, low: Lowering):
-        # dynamic lookup: x = ser[scalar_var] → value at that date
-        # (reference ``fame2py_converter.py:497-503``)
-        if isinstance(stmt.expr, DynLookup):
-            when = low.scalars.get(stmt.expr.var.lower())
-            if when is None:
-                raise FameScriptError(
-                    f"scalar {stmt.expr.var!r} not defined", stmt.line
-                )
-            low.line = stmt.line
-            return frame.first(
-                low.column(stmt.expr.name), out=stmt.target,
-                where=f"{ident(self.date_col)} = {when}",
-            )
-        text = low.lower(stmt.expr, stmt.line)
-        return frame.first(text, out=stmt.target, temps=low.take_temps())
 
     def _put_output(self, frame, pa: PlannedAssign, low: Lowering,
                     tmp: str, *leftovers: str) -> None:
@@ -373,8 +434,7 @@ class FameEngine:
                     "__fish_out", **self._operator_options())
         self._put_output(frame, pa, low, "__fish_out")
 
-    def _run_nlrx(self, frame, pa: PlannedAssign, scalars: dict[str, object],
-                  low: Lowering) -> None:
+    def _run_nlrx(self, frame, pa: PlannedAssign, low: Lowering) -> None:
         from .functions.nlrx import nlrx
 
         stmt: NlrxStmt = pa.stmt  # type: ignore[assignment]
@@ -382,11 +442,10 @@ class FameEngine:
         try:
             lamb = float(raw)
         except ValueError:
-            if raw.lower() in scalars:
-                lamb = scalars[raw.lower()]
-            else:  # a series: its first non-null value
-                low.line = stmt.line
-                lamb = frame.first(f"first({low.column(raw)}, true)", out=raw)
+            # a scalar's value, or a series' first non-null value
+            low.line = stmt.line
+            col = low.scalars.get(raw.lower()) or low.column(raw)
+            lamb = frame.first(f"first({col}, true)", out=raw)
             if lamb is None:
                 raise FameScriptError(
                     f"nlrx lambda {stmt.lamb!r} has no value", stmt.line

@@ -37,7 +37,7 @@ SQL-text traps
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from datetime import date as _date, datetime as _datetime
 from decimal import Decimal
 
@@ -105,10 +105,10 @@ def sql_literal(value: object) -> str:
 class Lowering:
     """Lowers expressions against one frame's schema.
 
-    ``scalars`` maps a scalar's lower-case name to the SQL text of its
-    value; ``columns`` maps the frame's lower-cased column names to the
-    names themselves and is kept up to date by the frame, or is None
-    when the input columns are unknown (generated code).
+    ``scalars`` maps a scalar's lower-case name to the SQL text that
+    reads its value; ``columns`` maps the frame's lower-cased column
+    names to the names themselves and is kept up to date by the frame,
+    or is None when the input columns are unknown (generated code).
     """
 
     date_col: str = "DATE"
@@ -193,6 +193,28 @@ class Lowering:
         """The series value at date *when*, broadcast to every row."""
         return (f"max(CASE WHEN {ident(self.date_col)} = {when} "
                 f"THEN {self.column(name)} END) OVER ({self.full})")
+
+    def uniform(self, node: X.Expr) -> bool:
+        """Whether *node* has one value over the whole series (per
+        entity): literals, scalars, whole-series aggregates, ``ser[date]``
+        picks, and row-wise functions of these."""
+        if isinstance(node, X.DateCol):
+            return False
+        if isinstance(node, X.Ref):
+            return node.name.lower() in self.scalars
+        if isinstance(node, (X.DateIndexRef, X.DynLookup)):
+            return True
+        if isinstance(node, X.Func):
+            if node.name in ("pct", "diff"):
+                return False
+            if (node.name in _VALUE_AGGS or node.name == "make"
+                    or (node.name in _SERIES_AGGS and len(node.args) == 1)):
+                return True
+        values = (getattr(node, f.name) for f in fields(node))
+        return all(self.uniform(c)
+                   for v in values
+                   for c in (v if isinstance(v, tuple) else (v,))
+                   if isinstance(c, X.Expr))
 
     def expr(self, node: X.Expr) -> tuple[str, bool]:
         """(SQL text, whether it contains a window function)."""

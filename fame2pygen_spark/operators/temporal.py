@@ -880,9 +880,8 @@ def decayed_sum(
     "sum over the last N days" that needs no backfill when N changes.
 
     Scale shape: the reference date is a 1-row global aggregate
-    broadcast back via cross join (the repo's scalar idiom, see
-    engine._eval_scalar); the weighted terms are row-local doubles
-    (one ``pow`` per row, deterministic), decimal-cast before
+    broadcast back via cross join; the weighted terms are row-local
+    doubles (one ``pow`` per row, deterministic), decimal-cast before
     summation so the per-key result is independent of partitioning
     and accumulation order.  One shuffle, keyed by *keys*.
 

@@ -107,6 +107,10 @@ SCRIPTS = {
         "lambda20 = 20",
         "sm = nlrx(lambda20, a, b, b, b, b, holes, holes)",
     ],
+    "nlrx_scalar_lambda": [
+        "scalar lam = 20",
+        "sm = nlrx(lam, a, b, b, b, b, holes, holes)",
+    ],
     "lookup_converted": [
         "freq m",
         "aq = convert(a, q, disc, ave)",
@@ -171,6 +175,12 @@ def test_generated_source_is_compilable_and_readable():
     compile(src, "<generated>", "exec")  # syntactically valid
     # inline Spark SQL text, not helper calls
     assert "lag(" in src and "withColumns" in src
+
+
+def test_generated_scalars_are_columns_not_probes():
+    src = generate_test_script(SCRIPTS["pit_scalar"])
+    assert ".first()" not in src
+    assert "'__scalar_peak'" in src and "df.drop('__scalar_peak')" in src
 
 
 def test_helper_library_emission(tmp_path):

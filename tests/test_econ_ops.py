@@ -181,3 +181,21 @@ def test_nlrx_lambda_from_series(spark):
     # linear input → HP trend reproduces it exactly (zero penalty on line)
     for i, r in enumerate(out):
         assert r["A_T"] == pytest.approx(float(i), abs=1e-6)
+
+
+def test_nlrx_lambda_from_scalar(spark):
+    dates = [dt.date(2020, 1, 1) + dt.timedelta(days=30 * i) for i in range(12)]
+    rows = [(d, float(i * i % 7), 1.0, 1.0, 1.0, 1.0, 0.0, 0.0)
+            for i, d in enumerate(dates)]
+    df = spark.createDataFrame(
+        rows, "DATE date, A double, B1 double, B2 double, B3 double, "
+        "B4 double, C double, D double"
+    )
+    tail = "a, b1, b2, b3, b4, c, d)"
+    numeric = run_script(df, [f"a_t = nlrx(20, {tail}"]).df
+    named = run_script(df, ["scalar lam = 20", f"a_t = nlrx(lam, {tail}"]).df
+    want = [r["A_T"] for r in numeric.orderBy("DATE").collect()]
+    got = [r["A_T"] for r in named.orderBy("DATE").collect()]
+    assert got == pytest.approx(want, rel=1e-12)
+    assert len(set(round(v, 6) for v in want)) > 1  # a curve, not a constant
+    assert named.columns == numeric.columns

@@ -554,14 +554,20 @@ def test_every_construct_has_a_lowering(spark):
 # --------------------------------------- bad scripts fail before Spark work
 
 
-def _no_jobs_started(spark, group, fn):
+def _jobs_started(spark, group, fn) -> list[int]:
+    """The ids of the Spark jobs that *fn* starts."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, group)
+    sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _no_jobs_started(spark, group, fn):
+    assert _jobs_started(spark, group, fn) == []
 
 
 def test_unknown_series_raises_before_spark_work(spark):
@@ -578,14 +584,13 @@ def test_unknown_series_raises_before_spark_work(spark):
             run_script(df, ["v = a + 1", "freq mm", "w = v * 2"])
         assert err.value.line == "freq mm"
         assert "unknown frequency 'mm'" in str(err.value)
+        # a ser[var] lookup resolves its series like any other reference
+        with pytest.raises(FameScriptError) as err:
+            run_script(df, ['scalar d = make(date(m), "2020-03-01")',
+                            "scalar x = bb[d]"])
+        assert err.value.line == "scalar x = bb[d]"
 
     _no_jobs_started(spark, "fame-unknown-series", run)
-    # a ser[var] lookup resolves its series like any other reference;
-    # only the date scalar's own probe runs before the error
-    with pytest.raises(FameScriptError) as err:
-        run_script(df, ['scalar d = make(date(m), "2020-03-01")',
-                        "scalar x = bb[d]"])
-    assert err.value.line == "scalar x = bb[d]"
 
 
 def test_dependency_cycle_raises_before_spark_work(spark):
@@ -631,3 +636,85 @@ def test_execute_py4j_round_trips_per_statement(spark, py4j_calls):
         res = FameEngine().execute(df, plan)
     assert calls[0] <= 10 * len(script), calls[0]
     assert len(res.df.columns) == 4 + 40
+
+
+# ------------------------------------------------------- scalars in the plan
+
+
+def test_scalars_start_no_job_until_read(spark):
+    """Scalars are columns of the plan: ``execute`` starts no Spark job,
+    and ``FameResult.scalars`` reads them all with one action, once."""
+    from fame2pygen_spark import FameEngine
+    from fame2pygen_spark.parser.grammar import parse_script
+    from fame2pygen_spark.plans.planner import build_plan
+
+    df = _lowered_frame(spark)
+    plan = build_plan(parse_script([
+        "scalar mean_a = ave(a)",
+        'scalar d = make(date(m), "2020-03-01")',
+        "scalar x = b[d]",
+        "set <date 2020-02-01 to 2020-03-31> w = a * mean_a",
+        'a["2020-04-01"] = x + mean_a',
+    ]))
+    results = []
+    _no_jobs_started(spark, "fame-scalars-execute",
+                     lambda: results.append(FameEngine().execute(df, plan)))
+    res = results[0]
+    read = _jobs_started(spark, "fame-scalars-read",
+                         lambda: results.append(dict(res.scalars)))
+    assert read
+    _no_jobs_started(spark, "fame-scalars-cached",
+                     lambda: results.append(dict(res.scalars)))
+    want = {"mean_a": 2.5, "d": dt.date(2020, 3, 1), "x": 0.0}
+    assert results[1] == results[2] == want
+    assert not any(c.startswith("__") for c in res.df.columns)
+    assert by_date(res.df, "A", "W") == [
+        (1.0, None), (2.0, 5.0), (3.0, 7.5), (2.5, None)]
+
+
+def test_fame_actions_are_described_and_keep_the_callers_description(spark):
+    """The three actions of the FAME path (frequency inference, an nlrx
+    lambda probe, the scalars read) run under a job description naming
+    them, and the caller's own description is restored after each."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    df = _lowered_frame(spark)
+    results = []
+    sc.setJobDescription("caller's description")
+    try:
+        execute = _jobs_started(spark, "fame-described-execute", lambda: (
+            results.append(run_script(df, [
+                "q = convert(a, q, disc, ave)",
+                "scalar lam = 20",
+                "sm = nlrx(lam, a, b, b, b, b, b, b)",
+            ]))))
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller's description")
+        read = _jobs_started(spark, "fame-described-read",
+                             lambda: results[0].scalars["lam"])
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller's description")
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+    def described(ids):
+        return {store.job(i).description().get() for i in ids}
+
+    assert described(execute) == {"FAME infer_frequency", "FAME nlrx lambda lam"}
+    assert described(read) == {"FAME scalars"}
+
+
+def test_scalars_are_per_entity(spark):
+    """Under ``entity_cols`` each entity's scalar is taken over its own
+    series; ``FameResult.scalars`` reports the first entity."""
+    df = spark.createDataFrame(
+        [(e, dt.date(2020, m, 1), scale * m)
+         for e, scale in (("b", 10.0), ("a", 1.0)) for m in range(1, 4)],
+        "ENT string, DATE date, A double",
+    )
+    res = run_script(df, ["scalar b0 = firstvalue(a)", "rel = a / b0"],
+                     entity_cols=("ENT",))
+    rows = res.df.orderBy("ENT", "DATE").collect()
+    assert [(r["ENT"], r["REL"]) for r in rows] == [
+        ("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 1.0), ("b", 2.0), ("b", 3.0)]
+    assert dict(res.scalars) == {"b0": 1.0}
